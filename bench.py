@@ -475,10 +475,14 @@ def bench_streaming(spark, sf_dir: str) -> dict:
         # seasonal baseline stage: the hour-of-day stateful detector
         # (streaming twin of x_seasonal_anomaly) over the same enriched
         # feed the stats operator consumes
-        from kafka_dead_letter_analyzer_spark.streaming.engine import (
+        from kafka_dead_letter_analyzer_spark.operators.enrich import (
             enrich_with_context,
-            split_errors,
+        )
+        from kafka_dead_letter_analyzer_spark.operators.errors import split_errors
+        from kafka_dead_letter_analyzer_spark.plans.topology import (
             stream_dead_letters,
+        )
+        from kafka_dead_letter_analyzer_spark.streaming.engine import (
             streaming_seasonal_alerts,
         )
 

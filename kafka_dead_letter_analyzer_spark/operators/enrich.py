@@ -17,7 +17,7 @@ as columns, so enrichment is a plain projection — no processor API needed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_dead_letter_analyzer_spark.functions.classify import classify_stack_trace
@@ -28,6 +28,12 @@ from kafka_dead_letter_analyzer_spark.operators.errors import (
 )
 
 
+def missing_stack_trace(stack_trace: Column) -> Column:
+    """N1's one failure: an unclassifiable (NULL) stack trace raises
+    NoSuchElementException("No value present") (ContextEnricher.java:39)."""
+    return raise_when(stack_trace.isNull(), NO_SUCH_ELEMENT, "No value present")
+
+
 def enrich_with_context(dead_letters: DataFrame) -> DataFrame:
     """rows(topic, partition, offset, timestamp, key, dead_letter)
     -> + context struct, error_key struct, E1 error channel.
@@ -36,7 +42,7 @@ def enrich_with_context(dead_letters: DataFrame) -> DataFrame:
     (envelope columns), ``dead_letter`` is the normalized struct.
     """
     stack_trace = F.col("dead_letter.cause.stack_trace")
-    error = raise_when(stack_trace.isNull(), NO_SUCH_ELEMENT, "No value present")
+    error = missing_stack_trace(stack_trace)
     context = F.struct(
         F.col("key").cast("string").alias("key"),
         F.col("offset").cast("long").alias("offset"),

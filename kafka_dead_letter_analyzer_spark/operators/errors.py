@@ -12,10 +12,13 @@ Spark has no built-in success/failure bifurcation, so this module provides
 the engine's equivalent, entirely with column expressions (SURVEY.md §7.3):
 fallible logic is expressed as *validity predicates* that produce an error
 struct ``struct<error_class, message>`` (NULL == success) instead of
-throwing. ``split_errors`` then filters the frame both ways — two narrow,
-re-optimizable scans over the same plan; Catalyst pushes the complementary
-predicates down, and with AQE the shared subplan is evaluated once per
-stage. No Python UDFs, no exceptions crossing the JVM boundary.
+throwing. ``split_errors`` then filters the frame both ways. The two sides
+are two plans: each one that is executed scans and computes the shared
+subplan again (Catalyst does not share it between them, and AQE, which is
+off under streaming anyway, reuses only identical exchanges). A consumer
+that needs both sides of a stage should filter once on the channel column
+instead (``plans.topology.error_topic``). No Python UDFs, no exceptions
+crossing the JVM boundary.
 
 Divergence note (documented): real Java exceptions carry stack traces; our
 declarative errors synthesize a single-line trace ``"{class}: {message}"``
@@ -80,12 +83,13 @@ def synthetic_stack_trace(error: Column) -> Column:
 
 
 def error_to_dead_letter(
-    err_df: DataFrame, description: str, input_value: Column
+    err_df: DataFrame, description: str | Column, input_value: Column
 ) -> DataFrame:
     """E2: captured error row -> normalized ``dead_letter`` struct column.
 
     ``description`` is the stage-specific fixed string, exactly one of the
-    reference's three (DeadLetterAnalyzerTopology.java:120,133,214).
+    reference's three (DeadLetterAnalyzerTopology.java:120,133,214), or a
+    column choosing among them per row.
     """
     err = F.col(ERROR_COL)
     dead_letter = F.struct(

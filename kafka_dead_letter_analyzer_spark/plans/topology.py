@@ -15,9 +15,12 @@ Input: a ``RAW_ENVELOPE``-shaped DataFrame (one row per consumed record,
 batch or streaming — the same column program runs under ``readStream``).
 
 Scale notes:
-- The four dialect branches are four filters over ONE scan; Catalyst merges
-  the shared subplan and pushes each branch's predicate into it. No data is
-  duplicated — only matching rows flow.
+- The four dialect branches are slots of ONE candidate array, exploded once
+  over ONE scan (``route_dead_letters``). Catalyst does not merge separate
+  branches over a shared source: each consumer of a derived frame re-plans
+  (and re-scans, re-decodes) it. So every output is a single pass over the
+  routed frame — the error topic included (``error_topic``), instead of a
+  union of one branch per failing stage.
 - The only shuffle in the whole topology is the hash Exchange under A1
   (exactly mirroring the reference's single repartition topic, R1).
 - Parsing/classification is pure codegen'd column work — no Python.
@@ -27,7 +30,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from kafka_dead_letter_analyzer_spark import cache_registry
 
@@ -36,7 +39,10 @@ from kafka_dead_letter_analyzer_spark.operators.aggregate import (
     error_statistics,
     first_examples,
 )
-from kafka_dead_letter_analyzer_spark.operators.enrich import enrich_with_context
+from kafka_dead_letter_analyzer_spark.operators.enrich import (
+    enrich_with_context,
+    missing_stack_trace,
+)
 from kafka_dead_letter_analyzer_spark.operators.errors import (
     ERROR_COL,
     error_to_dead_letter,
@@ -79,9 +85,11 @@ class TopologyOutputs:
     enriched: DataFrame
 
 
-def stream_dead_letters(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """S1/S2 + F1/F2 + P1-P3 + U1: normalize every input record into a
-    ``dead_letter`` struct; returns ``(dead_letters, conversion_errors)``.
+def route_dead_letters(raw: DataFrame) -> DataFrame:
+    """S1/S2 + F1/F2 + P1-P3 + U1 before the E1 split: one row per
+    (record, matching dialect) with the envelope columns, ``value_text``,
+    the normalized ``dead_letter`` and the parser's conversion error in
+    the E1 channel column (NULL == parsed).
 
     Branch semantics: union of independent filters — NOT if/elif — a record
     carrying two dialects' headers is normalized twice
@@ -133,11 +141,17 @@ def stream_dead_letters(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("value_text"),
         _CANDIDATES_CACHE[0],
     )
-    exploded = (
+    return (
         with_candidates.select(
             *ENVELOPE_COLS,
             "value_text",
-            F.explode("_cands").alias("_cand"),
+            # explode_outer, not explode: for an inner explode Catalyst
+            # infers a ``size(_cands) > 0`` filter and pushes it below the
+            # decode's staged Projects, inlining the whole candidate array
+            # (Avro UDF included) into a Filter over the scan — a second
+            # Python decode per query. The four-slot array is never null
+            # or empty, so the outer form yields the same rows.
+            F.explode_outer("_cands").alias("_cand"),
         )
         .filter(F.col("_cand").isNotNull())
         .select(
@@ -148,7 +162,13 @@ def stream_dead_letters(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
     )
 
-    ok, bad = split_errors(exploded)
+
+def stream_dead_letters(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Normalize every input record into a ``dead_letter`` struct; returns
+    ``(dead_letters, conversion_errors)`` — the E1 split of
+    :func:`route_dead_letters`, parse failures rendered by E2 ("Error
+    converting errors to dead letters")."""
+    ok, bad = split_errors(route_dead_letters(raw))
     dead_letters = ok.drop("value_text")
     # E2: captured parse failure -> DeadLetter (input_value = raw value)
     conversion_errors = to_error_topic(
@@ -157,32 +177,55 @@ def stream_dead_letters(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     return dead_letters, conversion_errors
 
 
-def build_topology(raw: DataFrame) -> TopologyOutputs:
-    """Wire the complete dataflow over a RAW_ENVELOPE frame."""
-    dead_letters, conversion_errors = stream_dead_letters(raw)
-
-    # N1 under E1; failures -> "Error analyzing dead letter" (E2/E3)
-    enriched_all = enrich_with_context(dead_letters)
-    enriched, analyze_bad = split_errors(enriched_all)
-    analysis_errors = to_error_topic(
+def error_topic(routed: DataFrame) -> DataFrame:
+    """E2 + K4 for both fallible stages in ONE pass over the routed frame:
+    a conversion failure (P1-P3, "Error converting errors to dead letters",
+    ``input_value`` = raw value) or, for a parsed dead letter, an
+    enrichment failure (N1, "Error analyzing dead letter", ``input_value``
+    = the dead letter's JSON). The bag equals the union of the two stages'
+    error streams, without a second scan and decode of the source."""
+    conversion = F.col(ERROR_COL)
+    is_conversion = F.col("_conversion")
+    flagged = routed.select(
+        "key",
+        "value_text",
+        "dead_letter",
+        # flag first: the coalesce below overwrites the channel column
+        conversion.isNotNull().alias("_conversion"),
+        F.coalesce(
+            conversion, missing_stack_trace(F.col("dead_letter.cause.stack_trace"))
+        ).alias(ERROR_COL),
+    ).filter(F.col(ERROR_COL).isNotNull())
+    return to_error_topic(
         error_to_dead_letter(
-            analyze_bad.drop("context", "error_key"),
-            ANALYZE_ERROR_DESC,
-            F.to_json(F.col("dead_letter")),
+            flagged,
+            F.when(is_conversion, CONVERT_ERROR_DESC).otherwise(ANALYZE_ERROR_DESC),
+            F.when(is_conversion, F.col("value_text")).otherwise(
+                F.to_json(F.col("dead_letter"))
+            ),
         )
     )
 
-    # A1 (the single shuffle) + sink projections
-    stats = to_full_error_statistics(error_statistics(enriched))
-    examples = to_error_examples(first_examples(enriched))
-    full = to_full_dead_letters(enriched)
 
-    error_topic = conversion_errors.unionByName(analysis_errors)
+def enrich_and_route_errors(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(enriched, error_topic)``: the successfully enriched dead letters
+    (N1 under E1, feeding O1-O3) and the error topic (O4), both over one
+    routed frame."""
+    routed = route_dead_letters(raw)
+    dead_letters = split_errors(routed)[0].drop("value_text")
+    enriched = split_errors(enrich_with_context(dead_letters))[0]
+    return enriched, error_topic(routed)
+
+
+def build_topology(raw: DataFrame) -> TopologyOutputs:
+    """Wire the complete dataflow over a RAW_ENVELOPE frame."""
+    enriched, errors = enrich_and_route_errors(raw)
+    # A1 (the single shuffle) + sink projections
     return TopologyOutputs(
-        full_dead_letters=full,
-        error_statistics=stats,
-        error_examples=examples,
-        error_topic=error_topic,
+        full_dead_letters=to_full_dead_letters(enriched),
+        error_statistics=to_full_error_statistics(error_statistics(enriched)),
+        error_examples=to_error_examples(first_examples(enriched)),
+        error_topic=errors,
         enriched=enriched,
     )
 

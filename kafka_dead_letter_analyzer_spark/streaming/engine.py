@@ -36,20 +36,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_dead_letter_analyzer_spark.operators.aggregate import error_statistics
-from kafka_dead_letter_analyzer_spark.operators.enrich import enrich_with_context
-from kafka_dead_letter_analyzer_spark.operators.errors import (
-    error_to_dead_letter,
-    split_errors,
-)
 from kafka_dead_letter_analyzer_spark.operators.project import (
-    to_error_topic,
     to_full_dead_letters,
     to_full_error_statistics,
 )
-from kafka_dead_letter_analyzer_spark.plans.topology import (
-    ANALYZE_ERROR_DESC,
-    stream_dead_letters,
-)
+from kafka_dead_letter_analyzer_spark.plans.topology import enrich_and_route_errors
 from kafka_dead_letter_analyzer_spark.functions.formatting import (
     format_timestamp,
     stats_key,
@@ -91,9 +82,11 @@ def _first_example_fn(key, pdfs, state) -> Iterator:
 
     The example payload crosses the Arrow boundary as a JSON string —
     nested structs stay in the JVM; state is a single boolean per key.
-    Within one micro-batch, (ts, offset) breaks ties deterministically;
-    across batches, arrival order rules (the reference's semantics).
+    Within one micro-batch, the least (ts, offset) wins, across all of the
+    key's Arrow chunks; across batches, arrival order rules (the
+    reference's semantics).
     """
+    import numpy as np
     import pandas as pd
 
     if state.exists:
@@ -104,9 +97,10 @@ def _first_example_fn(key, pdfs, state) -> Iterator:
     for pdf in pdfs:
         if len(pdf) == 0:
             continue
-        cand = pdf.sort_values(["ts", "offset"], kind="stable").iloc[0]
-        if first is None or (cand["ts"], cand["offset"]) < (first["ts"], first["offset"]):
-            first = cand
+        ts, offset = pdf["ts"].to_numpy(), pdf["offset"].to_numpy()
+        i = np.lexsort((offset, ts))[0]
+        if first is None or (ts[i], offset[i]) < first[:2]:
+            first = (ts[i], offset[i], pdf["example_json"].iat[i])
     if first is None:
         return
     state.update((True,))
@@ -114,7 +108,7 @@ def _first_example_fn(key, pdfs, state) -> Iterator:
         {
             "topic": [key[0]],
             "type": [key[1]],
-            "example_json": [first["example_json"]],
+            "example_json": [first[2]],
         }
     )
 
@@ -664,20 +658,8 @@ def start_stateless_outputs(
 
 def _stateless_outputs(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(full_dead_letters, error_topic) for one batch of raw envelopes."""
-    dead_letters, conversion_errors = stream_dead_letters(raw)
-    enriched_all = enrich_with_context(dead_letters)
-    enriched, analyze_bad = split_errors(enriched_all)
-    analysis_errors = to_error_topic(
-        error_to_dead_letter(
-            analyze_bad.drop("context", "error_key"),
-            ANALYZE_ERROR_DESC,
-            F.to_json(F.col("dead_letter")),
-        )
-    )
-    return (
-        to_full_dead_letters(enriched),
-        conversion_errors.unionByName(analysis_errors),
-    )
+    enriched, error_topic = enrich_and_route_errors(raw)
+    return to_full_dead_letters(enriched), error_topic
 
 
 def build_streaming_topology(raw_stream: DataFrame) -> StreamingTopology:
@@ -686,25 +668,14 @@ def build_streaming_topology(raw_stream: DataFrame) -> StreamingTopology:
     Identical wiring to the batch ``build_topology`` (SURVEY.md §3.2)
     except A1's two halves use the streaming operators above.
     """
-    dead_letters, conversion_errors = stream_dead_letters(raw_stream)
-
-    enriched_all = enrich_with_context(dead_letters)
-    enriched, analyze_bad = split_errors(enriched_all)
-    analysis_errors = to_error_topic(
-        error_to_dead_letter(
-            analyze_bad.drop("context", "error_key"),
-            ANALYZE_ERROR_DESC,
-            F.to_json(F.col("dead_letter")),
-        )
-    )
-
+    enriched, error_topic = enrich_and_route_errors(raw_stream)
     return StreamingTopology(
         full_dead_letters=to_full_dead_letters(enriched),
         error_statistics=to_full_error_statistics(
             streaming_error_statistics(enriched)
         ),
         error_examples=streaming_first_examples(enriched),
-        error_topic=conversion_errors.unionByName(analysis_errors),
+        error_topic=error_topic,
     )
 
 

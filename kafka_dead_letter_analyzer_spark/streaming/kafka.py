@@ -321,10 +321,14 @@ def decode_kafka_records(
         )
 
     value_text = F.col("value").cast("string")
-    # Staged projections: each parse attempt is materialized ONCE in its
-    # own Project; the validity predicate references it 3x and the value a
-    # 4th time — inlined, the parse would re-run per reference
-    # (subexpression elimination skips conditional branches).
+    # Staged projections: each parse attempt gets its own Project, so the
+    # validity predicate (3 references) and the value (a 4th) read one
+    # computed column — inlined, the parse would re-run per reference
+    # (subexpression elimination skips conditional branches). This holds
+    # only while no predicate over these columns is pushed below the
+    # Projects: a pushed Filter inlines them, and a Python decode in it is
+    # planned as a second ArrowEvalPython over the scan (see the
+    # explode_outer in plans.topology.route_dead_letters).
     parse_cols = {"_json": F.from_json(value_text, DEAD_LETTER)}
     if use_avro:
         # One decoder UDF serves both columns; the JVM prefilter keeps

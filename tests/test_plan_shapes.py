@@ -9,9 +9,21 @@ pruning, broadcast joins, scan counts, codegen coverage).
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
 import io
+import json
+import re
+from collections import Counter
 
+import pandas as pd
 import pytest
+
+from kafka_dead_letter_analyzer_spark.functions.avro_codec import (
+    confluent_frame,
+    dead_letter_avro_schema,
+    encode_bytes,
+)
+from kafka_dead_letter_analyzer_spark.sources import fixtures as FX
 
 SF = "/root/testdata/sf0.001"
 
@@ -1623,3 +1635,229 @@ def test_chrf_pairs_same_plan_contract_as_bleu(spark, Q):
     assert "HashAggregate" not in s
     assert len(re.findall(r"\(\d+\) Exchange\b", s)) == 2
     assert "REPARTITION_BY_NUM" in s
+
+
+# ---------------------------------------------------------------------------
+# The analyzer decodes and routes each record once per query. An inner
+# ``explode`` of the dialect-candidate array let Catalyst infer a
+# ``size(_cands) > 0`` filter and push it below the decode, so the Python
+# Avro tier ran twice per query; and a two-branch union error topic scanned
+# and decoded the source once per branch.
+# ---------------------------------------------------------------------------
+
+KAFKA_DDL = (
+    "key binary, value binary, "
+    "headers array<struct<key:string,value:binary>>, "
+    "topic string, partition int, offset long, timestamp timestamp"
+)
+
+_TS = dt.datetime(2024, 1, 1, 12, 0, 0, tzinfo=dt.timezone.utc)
+
+
+def _avro_value(stack_trace: str | None) -> bytes:
+    rec = FX.dead_letter_value(stack_trace=stack_trace)
+    rec["input_timestamp"] = 1704110400000
+    return confluent_frame(
+        encode_bytes(rec, json.loads(dead_letter_avro_schema())), 1
+    )
+
+
+@pytest.fixture(scope="module")
+def kafka_parquet(spark, tmp_path_factory):
+    """Kafka-schema parquet: plain-text keys, framed Avro dead letters (one
+    without a stack trace, so the error topic has a row)."""
+    trace = "java.lang.IllegalStateException: x\n\tat a.B.c(B.java:1)\n"
+    rows = [
+        (
+            bytearray(b"k%d" % i),
+            bytearray(_avro_value(None if i == 3 else trace)),
+            None,
+            "t-dead-letters",
+            0,
+            i,
+            _TS + dt.timedelta(seconds=i),
+        )
+        for i in range(6)
+    ]
+    path = str(tmp_path_factory.mktemp("plan_shapes") / "src")
+    spark.createDataFrame(rows, KAFKA_DDL).coalesce(1).write.parquet(path)
+    return path
+
+
+def _count(plan: str, node: str) -> int:
+    return len(re.findall(node, plan))
+
+
+def test_each_streaming_output_decodes_once(spark, kafka_parquet, tmp_path):
+    """The four ``cli.run_streaming`` outputs, each as its own query over
+    the Python Avro tier: one scan and one ``ArrowEvalPython`` per
+    micro-batch plan."""
+    from kafka_dead_letter_analyzer_spark.streaming.engine import (
+        build_streaming_topology,
+    )
+    from kafka_dead_letter_analyzer_spark.streaming.kafka import (
+        decode_kafka_records,
+        kafka_sink_projection,
+    )
+
+    raw = spark.readStream.schema(KAFKA_DDL).parquet(kafka_parquet)
+    topo = build_streaming_topology(decode_kafka_records(raw, use_avro="python"))
+    plans = {}
+    for attr, mode in (
+        ("full_dead_letters", "append"),
+        ("error_statistics", "update"),
+        ("error_examples", "update"),
+        ("error_topic", "append"),
+    ):
+        q = (
+            kafka_sink_projection(getattr(topo, attr))
+            .writeStream.format("noop")
+            .outputMode(mode)
+            .option("checkpointLocation", str(tmp_path / attr))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            execution = q._jsq.streamingQuery().lastExecution()
+            plans[attr] = execution.executedPlan().toString()
+        finally:
+            q.stop()
+    shapes = {
+        attr: (_count(p, "ArrowEvalPython"), _count(p, "Scan parquet"))
+        for attr, p in plans.items()
+    }
+    assert shapes == {attr: (1, 1) for attr in plans}, shapes
+
+
+def test_batch_error_topic_scans_source_once(spark, kafka_parquet):
+    from kafka_dead_letter_analyzer_spark.plans.topology import build_topology
+    from kafka_dead_letter_analyzer_spark.streaming.kafka import (
+        decode_kafka_records,
+    )
+
+    raw = decode_kafka_records(
+        spark.read.schema(KAFKA_DDL).parquet(kafka_parquet), use_avro="python"
+    )
+    errors = build_topology(raw).error_topic
+    s = plan_of(errors)
+    assert _node_headers(s, "ArrowEvalPython") == 1
+    assert _node_headers(s, "Scan parquet") == 1
+    [row] = errors.collect()
+    assert row["kafka_key"] == "k3"
+
+
+def test_single_pass_error_topic_bag(spark):
+    """Both stages' failures in one pass: the exact bag the union of the
+    conversion and analysis branches produced."""
+    from kafka_dead_letter_analyzer_spark.plans.topology import build_topology
+
+    raw = FX.raw_frame(
+        spark,
+        [
+            # malformed streams header AND an Avro value without a trace:
+            # one conversion error and one analysis error
+            FX.envelope(
+                offset=0,
+                key="both",
+                value_text="raw-both",
+                value_deadletter=FX.dead_letter_value(stack_trace=None),
+                headers=FX.streams_headers(partition="abc"),
+            ),
+            FX.envelope(
+                offset=1,
+                key="null-trace",
+                value_deadletter=FX.dead_letter_value(
+                    input_value="v1", stack_trace=None
+                ),
+            ),
+            FX.envelope(
+                offset=2,
+                key="bad-connect",
+                value_text="raw-connect",
+                headers=FX.connect_headers(task_id="t"),
+            ),
+            FX.envelope(  # parses and enriches: not on the error topic
+                offset=3, key="ok", value_deadletter=FX.dead_letter_value()
+            ),
+        ],
+    )
+    rows = build_topology(raw).error_topic.select(
+        "kafka_key",
+        "dead_letter.description",
+        "dead_letter.input_value",
+        "dead_letter.cause.error_class",
+        "dead_letter.cause.message",
+        "dead_letter.cause.stack_trace",
+    ).collect()
+
+    convert = "Error converting errors to dead letters"
+    analyze = "Error analyzing dead letter"
+    nfe = "java.lang.NumberFormatException"
+    nse = "java.util.NoSuchElementException"
+    avro_json = (
+        '{"input_value":"%s","partition":0,"topic":"source-topic","offset":5,'
+        '"description":"Error in map","cause":{"error_class":'
+        '"java.lang.RuntimeException","message":"boom"}}'
+    )
+    assert Counter(tuple(r) for r in rows) == Counter(
+        [
+            ("both", convert, "raw-both", nfe, 'For input string: "abc"',
+             f'{nfe}: For input string: "abc"'),
+            ("both", analyze, avro_json % "failed-value", nse,
+             "No value present", f"{nse}: No value present"),
+            ("null-trace", analyze, avro_json % "v1", nse,
+             "No value present", f"{nse}: No value present"),
+            ("bad-connect", convert, "raw-connect", nfe,
+             'For input string: "t"', f'{nfe}: For input string: "t"'),
+        ]
+    )
+
+
+class _State:
+    def __init__(self, exists: bool):
+        self.exists = exists
+        self.updates = []
+
+    def update(self, value):
+        self.updates.append(value)
+
+
+def _chunk(rows):
+    return pd.DataFrame(
+        {
+            "topic": ["t"] * len(rows),
+            "type": ["e"] * len(rows),
+            "ts": pd.to_datetime([r[0] for r in rows]),
+            "offset": pd.Series([r[1] for r in rows], dtype="int64"),
+            "example_json": [r[2] for r in rows],
+        }
+    )
+
+
+def test_first_example_tie_break_across_chunks():
+    """Least (ts, offset) wins: on equal ts the lower offset, and the
+    minimum is taken across the key's Arrow chunks."""
+    from kafka_dead_letter_analyzer_spark.streaming.engine import _first_example_fn
+
+    state = _State(exists=False)
+    chunks = [
+        _chunk([("2024-01-01 00:00:02", 1, "late"),
+                ("2024-01-01 00:00:01", 9, "tie-high")]),
+        _chunk([]),
+        _chunk([("2024-01-01 00:00:01", 4, "tie-low"),
+                ("2024-01-01 00:00:03", 0, "latest")]),
+    ]
+    [out] = list(_first_example_fn(("t", "e"), iter(chunks), state))
+    assert out.to_dict("records") == [
+        {"topic": "t", "type": "e", "example_json": "tie-low"}
+    ]
+    assert state.updates == [(True,)]
+
+
+def test_first_example_emits_nothing_once_seen():
+    from kafka_dead_letter_analyzer_spark.streaming.engine import _first_example_fn
+
+    state = _State(exists=True)
+    chunk = _chunk([("2024-01-01 00:00:00", 0, "x")])
+    assert list(_first_example_fn(("t", "e"), iter([chunk]), state)) == []
+    assert state.updates == []
