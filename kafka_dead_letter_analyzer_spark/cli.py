@@ -141,6 +141,7 @@ def run_batch(spark, config: AnalyzerConfig) -> dict[str, str]:
         )
         from kafka_dead_letter_analyzer_spark.operators.drift import (
             _pick_report_bucket,
+            bucket_counts,
             dead_letter_drift_report,
         )
 
@@ -151,12 +152,22 @@ def run_batch(spark, config: AnalyzerConfig) -> dict[str, str]:
         )
         # hour buckets when the feed's span fits the pair operators'
         # cap, day otherwise (a long-retention feed must not raise)
-        report = dead_letter_drift_report(
-            feed, ts_col="event_ts", group_cols=["topic", "type"],
-            bucket=_pick_report_bucket(feed, "event_ts"),
-        )
-        path = f"{config.batch_output}/drift"
-        report.write.mode("overwrite").parquet(path)
+        bucket = _pick_report_bucket(feed, "event_ts")
+        groups = ["topic", "type"]
+        # the detectors' shared contraction, released once the report
+        # is written so a long session keeps no cached frame per job
+        counts = bucket_counts(
+            feed, ts_col="event_ts", group_cols=groups, bucket=bucket
+        ).persist()
+        try:
+            report = dead_letter_drift_report(
+                feed, ts_col="event_ts", group_cols=groups, bucket=bucket,
+                counts_df=counts,
+            )
+            path = f"{config.batch_output}/drift"
+            report.write.mode("overwrite").parquet(path)
+        finally:
+            counts.unpersist()
         paths["drift"] = path
     return paths
 

@@ -41,15 +41,27 @@ buckets); tvd needs ``2 * n1 * n2 * 1000`` to fit (holds to ~68M
 balanced rows per half per group; shard past that); wasserstein additionally
 carries the value span (``n1 * n2 * span * 1000``).  Each raise names
 the sharding remedy.
+
+The pairwise trend statistics — Theil-Sen's median slope and
+Mann-Kendall's sign sum over every ``t1 < t2`` bucket pair — share one
+exact per-group numpy kernel (``_trend_kernel``) that ``applyInPandas``
+runs over the ``(group, bucket)`` contraction: the group's dense
+timeline is at most ``max_buckets`` longs, its O(B^2) pairs live and die
+inside one Python worker as int64 vectors, and nothing quadratic is ever
+shuffled or sorted by Spark.  ``dead_letter_drift_report`` builds that
+contraction once and feeds CUSUM, Hampel and one kernel pass from it.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from kafka_dead_letter_analyzer_spark import cache_registry
 from kafka_dead_letter_analyzer_spark.operators.common import (
     null_safe_group_join,
 )
@@ -195,6 +207,100 @@ def _counts_or(
             f" (bucket_counts output), got {list(counts_df.columns)}"
         )
     return counts_df
+
+
+def _span_guard(
+    counts: DataFrame,
+    groups: list,
+    max_buckets: int,
+    who: str,
+    bucket: str,
+    remedy: str,
+) -> DataFrame:
+    """Raise when any group's densified span exceeds ``max_buckets``
+    (one memoized probe, see :func:`_worst_span_buckets`); returns the
+    per-group ``(t_lo, t_hi)`` span frame."""
+    span = counts.groupBy(*groups).agg(
+        F.min("t").alias("t_lo"), F.max("t").alias("t_hi")
+    )
+    worst = _worst_span_buckets(counts, span, groups)
+    if worst is not None and worst > max_buckets:
+        raise ValueError(
+            f"{who}: a group spans {worst} {bucket} buckets"
+            f" (> max_buckets={max_buckets}); {remedy}"
+        )
+    return span
+
+
+def _trend_kernel(t: np.ndarray, x: np.ndarray) -> dict | None:
+    """Theil-Sen and Mann-Kendall statistics of ONE group, from its
+    sparse contraction rows ``(t, x)`` (distinct bucket indices, any
+    order).  Pure numpy, exact in int64.
+
+    The timeline densifies over ``[min t, max t]`` with zeros for empty
+    buckets; pairs are enumerated lag by lag (``dx = d`` for every
+    ``dy = x[i + d] - x[i]``).  Theil-Sen's slope is the lower-median
+    pair under the order ``(q, dy, dx)`` with ``q`` the IEEE-double
+    quotient ``float(dy) / float(dx)`` — the order the SQL form's
+    ``row_number`` window uses — found by ``np.partition`` on ``q`` and
+    a ``(dy, dx)`` sort of the pairs tied with the selected quotient
+    only.  Mann-Kendall's ``s_stat`` is the sum of ``sign(dy)`` over
+    the same pairs and ``var18 = B(B-1)(2B+5) - sum m(m-1)(2m+5)``
+    over the multiplicities ``m`` of repeated dense counts.  A group
+    with fewer than two buckets has no pairs: returns ``None``."""
+    t = np.asarray(t, dtype=np.int64)
+    lo = int(t.min())
+    b = int(t.max()) - lo + 1
+    if b < 2:
+        return None
+    dense = np.zeros(b, dtype=np.int64)
+    dense[t - lo] = np.asarray(x, dtype=np.int64)
+    lags = np.arange(1, b, dtype=np.int64)
+    dx = np.repeat(lags, b - lags)
+    dy = np.concatenate([dense[d:] - dense[:-d] for d in range(1, b)])
+    q = dy / dx  # float64(dy) / float64(dx), elementwise
+    k = (len(q) + 1) // 2 - 1
+    qk = np.partition(q, k)[k]
+    tied = np.flatnonzero(q == qk)
+    pick = tied[np.lexsort((dx[tied], dy[tied]))[k - np.count_nonzero(q < qk)]]
+    _, mult = np.unique(dense, return_counts=True)
+    return {
+        "slope_num": int(dy[pick]),
+        "slope_den": int(dx[pick]),
+        "n": int(dense.sum()),
+        "n_buckets": b,
+        "n_pairs": len(q),
+        "s_stat": np.count_nonzero(dy > 0) - np.count_nonzero(dy < 0),
+        "var18": b * (b - 1) * (2 * b + 5)
+        - int((mult * (mult - 1) * (2 * mult + 5)).sum()),
+    }
+
+
+def _trend_stats(
+    counts: DataFrame, groups: list, cols: Sequence[str]
+) -> DataFrame:
+    """Run :func:`_trend_kernel` once per group over the bucket
+    contraction — ``(*groups, *cols)`` with ``cols`` a subset of the
+    kernel's BIGINT statistics; groups with fewer than two buckets emit
+    no row.  The global form groups by a constant key."""
+    key = groups or ["__trend_key"]
+    src = counts if groups else counts.withColumn(key[0], F.lit(0))
+    schema = StructType(
+        [src.schema[g] for g in key]
+        + [StructField(c, LongType()) for c in cols]
+    )
+
+    def _apply(pdf):
+        got = _trend_kernel(pdf["t"].to_numpy(), pdf["x"].to_numpy())
+        out = pdf[key].iloc[: 1 if got else 0].reset_index(drop=True)
+        for c in cols:
+            out[c] = [got[c]] if got else []
+        return out
+
+    out = src.select(*key, "t", "x").groupBy(*key).applyInPandas(
+        _apply, schema=schema
+    )
+    return out if groups else out.drop(key[0])
 
 
 def cusum_changepoint(
@@ -675,20 +781,24 @@ def theilsen_trend(
 
     Exactness: slopes are rationals dy/dx of BIGINTs and are emitted
     AS the selected pair's (dy, dx) — never divided.  Selection
-    sorts by the IEEE-double quotient (exact-rounded identically on
-    every engine) with (dy, dx) tiebreak, then takes the lower median
-    by row_number; equal rationals with different representations
-    order deterministically by the tiebreak, and the selected
-    NUMERATOR/DENOMINATOR cross the hash gate as integers.
+    orders by the IEEE-double quotient (exact-rounded identically on
+    every engine) with (dy, dx) tiebreak and takes the lower median —
+    the element a SQL ``row_number`` over that order picks; equal
+    rationals with different representations order deterministically
+    by the tiebreak, and the selected NUMERATOR/DENOMINATOR cross the
+    hash gate as integers.
 
     Scale shape: the full-data shuffle is the (group, bucket) count;
-    the bucket timeline densifies via ``sequence()`` explode (bounded
-    by span/bucket) and pairs form by a contraction self-join within
-    each group — O(B^2) rows per group, parallel across groups,
-    NEVER touching row-level data.  ``max_buckets`` guards the
-    quadratic fan-out: the span probe is one tiny aggregate and the
-    operator RAISES past the cap (a 4000-bucket span is ~8M pairs per
-    group — pre-aggregate to a coarser bucket instead)."""
+    each group's contraction rows then go to ONE ``applyInPandas`` call
+    of the exact numpy kernel shared with :func:`mann_kendall`
+    (``_trend_kernel``), which densifies the timeline and forms the
+    O(B^2) pairs in worker memory — parallel across groups, NEVER
+    touching row-level data, and no pair row is shuffled or sorted by
+    Spark.  ``max_buckets`` still bounds the quadratic work per group:
+    the span probe is one tiny aggregate and the operator RAISES past
+    the cap (a 4000-bucket span is ~8M pairs per group — pre-aggregate
+    to a coarser bucket instead).  Groups with a single bucket have no
+    pairs and emit no row."""
     if bucket not in _BUCKET_US:
         raise ValueError(
             f"theilsen_trend: bucket must be one of {sorted(_BUCKET_US)},"
@@ -698,78 +808,13 @@ def theilsen_trend(
     groups = list(group_cols or [])
 
     counts = _counts_or(df, counts_df, ts_col, groups, bus, "theilsen_trend")
-
-    span = counts.groupBy(*groups).agg(
-        F.min("t").alias("t_lo"), F.max("t").alias("t_hi")
+    _span_guard(
+        counts, groups, max_buckets, "theilsen_trend", bucket,
+        "pre-aggregate to a coarser bucket or raise the cap",
     )
-    worst = _worst_span_buckets(counts, span, groups)
-    if worst is not None and worst > max_buckets:
-        raise ValueError(
-            f"theilsen_trend: a group spans {worst} {bucket} buckets"
-            f" (> max_buckets={max_buckets}); pre-aggregate to a coarser"
-            " bucket or raise the cap"
-        )
-
-    # densify: every bucket in the group's span, zeros where empty
-    timeline = span.select(
-        *groups,
-        F.explode(F.sequence("t_lo", "t_hi")).alias("t"),
-    )
-    # null-safe on the group key throughout (round 9): a NULL group is
-    # a real group under the span/counts groupBys, and plain equality
-    # silently dropped it from the trend output
-    dense = null_safe_group_join(
-        timeline, counts, groups, plain_keys=["t"], how="left"
-    ).select(
-        *groups,
-        "t",
-        F.coalesce("x", F.lit(0).cast("bigint")).alias("x"),
-    )
-
-    a = dense.select(
-        *groups, F.col("t").alias("t1"), F.col("x").alias("x1")
-    )
-    b = dense.select(
-        *groups, F.col("t").alias("t2"), F.col("x").alias("x2")
-    )
-    pairs = (
-        null_safe_group_join(a, b, groups)
-        if groups
-        else a.crossJoin(b)
-    ).filter(F.col("t2") > F.col("t1"))
-    slopes = pairs.select(
-        *groups,
-        (F.col("x2") - F.col("x1")).alias("dy"),
-        (F.col("t2") - F.col("t1")).alias("dx"),
-    ).withColumn(
-        "q", F.col("dy").cast("double") / F.col("dx").cast("double")
-    )
-    wg = Window.partitionBy(*groups) if groups else Window.partitionBy()
-    w_med = wg.orderBy(F.asc("q"), F.asc("dy"), F.asc("dx"))
-    w_all = wg.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ranked = slopes.withColumn("r", F.row_number().over(w_med)).withColumn(
-        "np", F.count(F.lit(1)).over(w_all)
-    )
-    med = ranked.filter(F.col("r") == F.expr("(np + 1) DIV 2"))
-
-    totals = dense.groupBy(*groups).agg(
-        F.sum("x").alias("n"),
-        F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-    )
-    out = (
-        null_safe_group_join(med, totals, groups)
-        if groups
-        else med.crossJoin(F.broadcast(totals))
-    )
-    return out.select(
-        *groups,
-        F.col("dy").alias("slope_num"),
-        F.col("dx").alias("slope_den"),
-        "n",
-        "n_buckets",
-        F.col("np").alias("n_pairs"),
+    return _trend_stats(
+        counts, groups,
+        ("slope_num", "slope_den", "n", "n_buckets", "n_pairs"),
     )
 
 
@@ -937,20 +982,14 @@ def hampel_outliers(
     groups = list(group_cols or [])
 
     counts = _counts_or(df, counts_df, ts_col, groups, bus, "hampel_outliers")
-    span = counts.groupBy(*groups).agg(
-        F.min("t").alias("t_lo"), F.max("t").alias("t_hi")
-    )
     # densify guard: hampel's window work is LINEAR in the span (unlike
     # the quadratic pair operators, so the default cap is generous),
     # but an adversarial span — one stray 1970 timestamp at ms buckets —
     # must raise, not materialize a gigarow sequence()
-    worst = _worst_span_buckets(counts, span, groups)
-    if worst is not None and worst > max_buckets:
-        raise ValueError(
-            f"hampel_outliers: a group spans {worst} {bucket} buckets"
-            f" (> max_buckets={max_buckets}); coarsen the bucket or"
-            " filter the stray timestamps"
-        )
+    span = _span_guard(
+        counts, groups, max_buckets, "hampel_outliers", bucket,
+        "coarsen the bucket or filter the stray timestamps",
+    )
     timeline = span.select(
         *groups, F.explode(F.sequence("t_lo", "t_hi")).alias("t")
     )
@@ -1007,11 +1046,13 @@ def mann_kendall(
     z = (S -+ 1) / sqrt(var18/18) driver-side.  Zeros densify in (a
     silent stretch is evidence of decline, not missing data).
 
-    Scale shape: identical to theilsen_trend — one (group, bucket)
-    count shuffle, sequence() densify, contraction self-join for the
-    sign pairs (O(B^2) per group, parallel across groups), one
-    value-multiplicity contraction for the tie term; ``max_buckets``
-    probes the span and RAISES (pre-aggregate to a coarser bucket)."""
+    Scale shape: identical to theilsen_trend, and the same kernel
+    (``_trend_kernel``) — one (group, bucket) count shuffle, then one
+    ``applyInPandas`` call per group that densifies the timeline and
+    sums the O(B^2) pair signs and the tie term in worker memory; no
+    pair row reaches Spark.  ``max_buckets`` probes the span and RAISES
+    (pre-aggregate to a coarser bucket).  Groups with a single bucket
+    emit no row."""
     if bucket not in _BUCKET_US:
         raise ValueError(
             f"mann_kendall: bucket must be one of {sorted(_BUCKET_US)},"
@@ -1021,71 +1062,11 @@ def mann_kendall(
     groups = list(group_cols or [])
 
     counts = _counts_or(df, counts_df, ts_col, groups, bus, "mann_kendall")
-    span = counts.groupBy(*groups).agg(
-        F.min("t").alias("t_lo"), F.max("t").alias("t_hi")
+    _span_guard(
+        counts, groups, max_buckets, "mann_kendall", bucket,
+        "pre-aggregate to a coarser bucket or raise the cap",
     )
-    worst = _worst_span_buckets(counts, span, groups)
-    if worst is not None and worst > max_buckets:
-        raise ValueError(
-            f"mann_kendall: a group spans {worst} {bucket} buckets"
-            f" (> max_buckets={max_buckets}); pre-aggregate to a coarser"
-            " bucket or raise the cap"
-        )
-    timeline = span.select(
-        *groups, F.explode(F.sequence("t_lo", "t_hi")).alias("t")
-    )
-    # null-safe on the group key throughout (round 9)
-    dense = null_safe_group_join(
-        timeline, counts, groups, plain_keys=["t"], how="left"
-    ).select(
-        *groups, "t",
-        F.coalesce("x", F.lit(0).cast("bigint")).alias("x"),
-    )
-
-    a = dense.select(
-        *groups, F.col("t").alias("t1"), F.col("x").alias("x1")
-    )
-    b = dense.select(
-        *groups, F.col("t").alias("t2"), F.col("x").alias("x2")
-    )
-    pairs = (
-        null_safe_group_join(a, b, groups) if groups else a.crossJoin(b)
-    ).filter(F.col("t2") > F.col("t1"))
-    s_agg = pairs.groupBy(*groups).agg(
-        F.sum(F.expr("sign(x2 - x1)")).cast("bigint").alias("s_stat")
-    )
-    ties = (
-        dense.groupBy(*groups, "x")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tcnt"))
-        .groupBy(*groups)
-        .agg(
-            F.sum(F.expr("tcnt * (tcnt - 1) * (2 * tcnt + 5)"))
-            .cast("bigint")
-            .alias("tie_term"),
-            F.sum("tcnt").cast("bigint").alias("n_buckets"),
-        )
-    )
-    totals = dense.groupBy(*groups).agg(
-        F.sum("x").cast("bigint").alias("n")
-    )
-    joined = (
-        null_safe_group_join(
-            null_safe_group_join(s_agg, ties, groups), totals, groups
-        )
-        if groups
-        else s_agg.crossJoin(F.broadcast(ties)).crossJoin(
-            F.broadcast(totals)
-        )
-    )
-    return joined.select(
-        *groups,
-        "s_stat",
-        F.expr(
-            "n_buckets * (n_buckets - 1) * (2 * n_buckets + 5) - tie_term"
-        ).cast("bigint").alias("var18"),
-        "n_buckets",
-        "n",
-    )
+    return _trend_stats(counts, groups, ("s_stat", "var18", "n_buckets", "n"))
 
 
 def dead_letter_drift_report(
@@ -1093,43 +1074,75 @@ def dead_letter_drift_report(
     ts_col: str,
     group_cols: Sequence[str],
     bucket: str = "hour",
+    counts_df: DataFrame | None = None,
 ) -> DataFrame:
     """The product-level drift dashboard over a dead-letter feed — one
-    row per group joining four detectors this module ships:
-    CUSUM's strongest up/down level shift (+ its ppm decisiveness),
-    the Theil-Sen robust trend rational, the Mann-Kendall test
-    statistics, and the count of Hampel-flagged poisoned buckets.
+    row per group with a non-NULL timestamp (every group CUSUM
+    reports), joining four detectors this module ships: CUSUM's
+    strongest up/down level shift (+ its ppm decisiveness), the
+    Theil-Sen robust trend rational, the Mann-Kendall test statistics,
+    and the count of Hampel-flagged poisoned buckets.
     ``(*group_cols, n, buckets, up_cp_ts, up_ppm, down_cp_ts,
     down_ppm, slope_num, slope_den, s_stat, var18, flagged_buckets)``.
+    A group whose feed falls in ONE bucket (a new error type's first
+    burst) has no bucket pairs: its trend and Mann-Kendall columns are
+    NULL, and it still gets its row.
 
     This is what `--drift-report` in the CLI writes next to the
     reference-shaped outputs: the reference emits per-key COUNTS and
     leaves "did it change" to the dashboard; this runs the change
-    question inside the engine, on the same normalized feed.  Each
-    component is independently differential-tested; the join keys on
-    the error-key domain (broadcast-sized by construction)."""
+    question inside the engine, on the same normalized feed.
+
+    Shared work: every detector reads ONE ``(group, bucket)``
+    contraction — ``counts_df`` when given (built by
+    :func:`bucket_counts` with the same ``ts_col``/``group_cols``/
+    ``bucket``; the caller owns its persistence), else built here,
+    persisted and registered with ``cache_registry`` for the session
+    owner's ``release_all``.  CUSUM and Hampel take it as their
+    ``counts_df``, one span probe guards the pair statistics'
+    ``max_buckets=4000`` cap (:func:`theilsen_trend`'s), and one kernel
+    pass (``_trend_kernel``) yields the Theil-Sen and Mann-Kendall
+    columns together.  The joins key on the error-key domain (broadcast-sized
+    by construction) and are NULL-safe."""
+    groups = list(group_cols)
+    if counts_df is None:
+        counts_df = cache_registry.track(
+            bucket_counts(df, ts_col, groups, bucket).persist()
+        )
     cp = cusum_changepoint(
-        df, ts_col=ts_col, group_cols=list(group_cols), bucket=bucket
+        df, ts_col=ts_col, group_cols=groups, bucket=bucket,
+        counts_df=counts_df,
     )
-    tr = theilsen_trend(
-        df, ts_col=ts_col, group_cols=list(group_cols), bucket=bucket
-    ).select(*group_cols, "slope_num", "slope_den")
-    mk = mann_kendall(
-        df, ts_col=ts_col, group_cols=list(group_cols), bucket=bucket
-    ).select(*group_cols, "s_stat", "var18")
     hp = (
         hampel_outliers(
-            df, ts_col=ts_col, group_cols=list(group_cols), bucket=bucket
+            df, ts_col=ts_col, group_cols=groups, bucket=bucket,
+            counts_df=counts_df,
         )
-        .groupBy(*group_cols)
+        .groupBy(*groups)
         .agg(
             F.sum(F.when(F.col("flagged"), 1).otherwise(0))
             .cast("bigint")
             .alias("flagged_buckets")
         )
     )
-    keys = list(group_cols)
-    return cp.join(tr, keys).join(mk, keys).join(hp, keys)
+    _span_guard(
+        counts_df, groups, 4000, "dead_letter_drift_report", bucket,
+        "pre-aggregate to a coarser bucket or raise the cap",
+    )
+    trend = _trend_stats(
+        counts_df, groups, ("slope_num", "slope_den", "s_stat", "var18")
+    )
+
+    def join(left, right, how):
+        if groups:
+            return null_safe_group_join(left, right, groups, how=how)
+        return left.join(right, F.lit(True), how)
+
+    return join(join(cp, hp, "inner"), trend, "left").select(
+        *groups, "n", "buckets", "up_cp_ts", "up_ppm", "down_cp_ts",
+        "down_ppm", "slope_num", "slope_den", "s_stat", "var18",
+        "flagged_buckets",
+    )
 
 
 def _pick_report_bucket(

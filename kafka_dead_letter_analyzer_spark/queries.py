@@ -9751,9 +9751,9 @@ def x_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection orders by the IEEE-double quotient (exact-rounded
     identically on both engines) with (dy, dx) tiebreak, and the
     SELECTED pair's integer numerator/denominator cross the hash gate,
-    never the quotient.  Pairs form by a self-join of the span/day-
-    bounded contraction per group (max_buckets probe RAISES on
-    unbounded spans), never touching row-level data."""
+    never the quotient.  Pairs form inside one per-group numpy kernel
+    (applyInPandas) over the span/day-bounded contraction (max_buckets
+    probe RAISES on unbounded spans), never touching row-level data."""
     from kafka_dead_letter_analyzer_spark.operators import drift as DR
 
     ev = load_table(spark, sf_dir, "events")
@@ -10624,8 +10624,8 @@ def x_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/drift.py::mann_kendall) — the hypothesis-test companion
     of x_theilsen_trend: S = sum sign(x_j - x_i) over the densified
     daily counts, plus the tie-corrected 18*Var(S) kept as an integer
-    so the z-score forms driver-side.  Same contraction self-join
-    scale shape as Theil-Sen; the two share one capped span probe
+    so the caller forms the z-score.  Same per-group kernel over the
+    contraction as Theil-Sen; the two share one capped span probe
     contract."""
     from kafka_dead_letter_analyzer_spark.operators import drift as DR
 

@@ -66,6 +66,12 @@ def test_batch_mode_drift_report(spark, tmp_path):
                     timestamp=base + dt.timedelta(hours=i // 2),
                     value_deadletter=FX.dead_letter_value())
         for i in range(8)  # 2 dead letters per hour, 4 hours
+    ] + [
+        # a second group's first burst: 6 dead letters within one hour
+        FX.envelope(topic="burst-dead-letters", offset=i,
+                    timestamp=base + dt.timedelta(minutes=5 * i),
+                    value_deadletter=FX.dead_letter_value())
+        for i in range(6)
     ]
     src = str(tmp_path / "raw_drift")
     FX.raw_frame(spark, rows).write.parquet(src)
@@ -74,17 +80,31 @@ def test_batch_mode_drift_report(spark, tmp_path):
         batch_input=src, batch_output=str(tmp_path / "out_drift"),
         drift_report=True,
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     paths = run_batch(spark, cfg)
+    # the detectors' shared contraction is released after the write
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     assert "drift" in paths
-    report = spark.read.parquet(paths["drift"]).collect()
-    assert len(report) == 1
-    r = report[0]
+    report = {
+        r["topic"]: r for r in spark.read.parquet(paths["drift"]).collect()
+    }
+    assert set(report) == {"my-dead-letters", "burst-dead-letters"}
+    r = report["my-dead-letters"]
     assert r["n"] == 8 and r["buckets"] == 4
     # perfectly steady rate: no level shift, flat robust trend,
     # Mann-Kendall S = 0, nothing Hampel-flagged
     assert r["up_ppm"] == 0 and r["down_ppm"] == 0
     assert r["slope_num"] == 0 and r["s_stat"] == 0
     assert r["flagged_buckets"] == 0
+    # one bucket: CUSUM reports it, no bucket pairs -> NULL trend and
+    # Mann-Kendall columns, but the group keeps its row
+    b = report["burst-dead-letters"]
+    assert b["n"] == 6 and b["buckets"] == 1
+    assert b["up_ppm"] == 0 and b["down_ppm"] == 0
+    assert b["flagged_buckets"] == 0
+    assert (b["slope_num"], b["slope_den"], b["s_stat"], b["var18"]) == (
+        None, None, None, None,
+    )
     # the flag defaults off: a plain batch run writes no drift dir
     cfg2 = AnalyzerConfig(
         batch_input=src, batch_output=str(tmp_path / "out_plain")

@@ -447,6 +447,142 @@ def test_theilsen_max_buckets_raises(spark):
 
 
 # ---------------------------------------------------------------------------
+# _trend_kernel: the pure numpy Theil-Sen / Mann-Kendall kernel (no JVM)
+
+
+def _trend_brute(sparse):
+    """O(B^2) reference over a sparse ``{t: x}`` timeline: densify with
+    zeros, enumerate every pair, sort by the SQL form's order
+    ``(CAST(dy AS DOUBLE) / CAST(dx AS DOUBLE), dy, dx)`` and take the
+    lower median; Mann-Kendall by definition."""
+    from collections import Counter
+
+    lo, hi = min(sparse), max(sparse)
+    dense = [sparse.get(t, 0) for t in range(lo, hi + 1)]
+    b = len(dense)
+    if b < 2:
+        return None
+    pairs = sorted(
+        (float(dense[j] - dense[i]) / float(j - i), dense[j] - dense[i], j - i)
+        for i in range(b)
+        for j in range(i + 1, b)
+    )
+    _, dy, dx = pairs[(len(pairs) + 1) // 2 - 1]
+    s = sum(
+        (dense[j] > dense[i]) - (dense[j] < dense[i])
+        for i in range(b)
+        for j in range(i + 1, b)
+    )
+    tie = sum(m * (m - 1) * (2 * m + 5) for m in Counter(dense).values())
+    return {
+        "slope_num": dy,
+        "slope_den": dx,
+        "n": sum(dense),
+        "n_buckets": b,
+        "n_pairs": len(pairs),
+        "s_stat": s,
+        "var18": b * (b - 1) * (2 * b + 5) - tie,
+    }
+
+
+def _run_kernel(sparse):
+    import numpy as np
+
+    from kafka_dead_letter_analyzer_spark.operators.drift import _trend_kernel
+
+    ts = list(sparse)
+    return _trend_kernel(
+        np.array(ts, dtype=np.int64),
+        np.array([sparse[t] for t in ts], dtype=np.int64),
+    )
+
+
+@pytest.mark.parametrize(
+    "dense, pick",
+    [
+        # 10 pairs (even): slopes 1/2 and 2/4 tie on the quotient; the
+        # (dy, dx) tie-break puts 1/2 first and the median lands on 2/4
+        ([1, 0, 2, 3, 3], (2, 4)),
+        # 15 pairs (odd), an all-zero stretch, same tie decided the same way
+        ([1, 0, 0, 1, 3, 3], (2, 4)),
+        # 3 pairs: 1/1, 1/1, 2/2 — the lower median is the first 1/1
+        ([1, 2, 3], (1, 1)),
+        # negative ties order the other way: -2/2 sorts before -1/1
+        ([2, 1, 0, 1], (-1, 1)),
+        ([1, 3, 3, 2, 0, 1], (-1, 2)),
+    ],
+    ids=["even-tie", "odd-zeros-tie", "odd-tie", "even-neg-tie",
+         "odd-neg-tie"],
+)
+def test_trend_kernel_tie_break_on_equal_rationals(dense, pick):
+    sparse = {t: x for t, x in enumerate(dense) if x}
+    got = _run_kernel(sparse)
+    assert got == _trend_brute(sparse)
+    assert (got["slope_num"], got["slope_den"]) == pick
+
+
+def test_trend_kernel_matches_brute_force_property():
+    """Property: for ANY sparse timeline (gaps densify to zeros, so
+    all-zero stretches are common; small counts make equal rationals
+    with different representations common), the kernel equals the
+    O(B^2) brute-force reference on every statistic."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    def timelines(lo, hi, max_size):
+        return st.dictionaries(
+            st.integers(min_value=lo, max_value=hi),  # bucket index
+            st.integers(min_value=1, max_value=4),    # events in it
+            min_size=1,
+            max_size=max_size,
+        )
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.one_of(timelines(0, 8, 9), timelines(-40, 40, 25)))
+    @example({-3: 2, 30: 2})  # long all-zero stretch
+    @example({5: 1})  # single bucket: no pairs, no row
+    def check(sparse):
+        assert _run_kernel(sparse) == _trend_brute(sparse), sparse
+
+    check()
+
+
+def test_drift_report_keeps_every_cusum_group(spark):
+    """dead_letter_drift_report equals its four detectors run alone, with
+    one row per group CUSUM reports: a single-bucket group gets NULL
+    trend and Mann-Kendall columns, and the NULL group keeps its row."""
+    from kafka_dead_letter_analyzer_spark.operators import drift as DR
+
+    rows = [
+        (g, _ts(h))
+        for g, hours in (
+            ("a", [0, 0, 1, 5, 5, 5, 9]),
+            (None, [1, 1, 2, 7]),
+            ("c", [3.1, 3.2, 3.3]),  # one bucket
+        )
+        for h in hours
+    ]
+    df = spark.createDataFrame(rows, "grp string, ts timestamp")
+    kw = {"ts_col": "ts", "group_cols": ["grp"], "bucket": "hour"}
+    report = {
+        r["grp"]: r.asDict()
+        for r in DR.dead_letter_drift_report(df, **kw).collect()
+    }
+    alone = {}
+    for op in (DR.cusum_changepoint, DR.theilsen_trend, DR.mann_kendall):
+        for r in op(df, **kw).collect():
+            alone.setdefault(r["grp"], {}).update(r.asDict())
+    for r in DR.hampel_outliers(df, **kw).collect():
+        got = alone.setdefault(r["grp"], {})
+        got["flagged_buckets"] = got.get("flagged_buckets", 0) + r["flagged"]
+    assert set(report) == set(alone) == {"a", None, "c"}
+    for g, r in report.items():
+        assert r == {k: alone[g].get(k) for k in r}, g
+    assert report["c"]["slope_num"] is None and report["c"]["var18"] is None
+    assert report["a"]["s_stat"] is not None
+
+
+# ---------------------------------------------------------------------------
 # benford_audit
 
 

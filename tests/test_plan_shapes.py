@@ -1861,3 +1861,72 @@ def test_first_example_emits_nothing_once_seen():
     chunk = _chunk([("2024-01-01 00:00:00", 0, "x")])
     assert list(_first_example_fn(("t", "e"), iter([chunk]), state)) == []
     assert state.updates == []
+
+
+# ---------------------------------------------------------------------------
+# The pairwise trend statistics run as one per-group numpy kernel over the
+# bucket contraction: no pair table (the dense timeline joined with itself
+# into every t1 < t2 pair) and no window sorting pairs by slope quotient.
+# ---------------------------------------------------------------------------
+
+
+def _executed_tree(plan: str) -> str:
+    """The executed part of a plan's tree: the AQE final plan, without
+    the top-level initial plan printed after it (nested cached plans
+    print theirs indented) or the formatted details."""
+    head = plan.split("\n(1) ")[0]
+    return head.split("\n+- == Initial Plan ==")[0]
+
+
+def _assert_one_trend_kernel(tree: str) -> None:
+    assert _count(tree, "FlatMapGroupsInPandas") == 1, tree
+    # the old Theil-Sen median: row_number over (q, dy, dx) per group
+    assert not re.search(r"Window \[[^\n]*\bq#\d+ ASC", tree), tree
+    # the old pair self-join: t1/t2 pair columns; at most Hampel's one
+    # densified timeline remains
+    assert not re.search(r"\bt[12]#\d+", tree), tree
+    assert _count(tree, r"explode\(sequence\(") <= 1, tree
+
+
+def test_theilsen_runs_one_kernel_no_pair_table(spark):
+    from kafka_dead_letter_analyzer_spark.operators.drift import theilsen_trend
+
+    rows = [
+        (g, _TS + dt.timedelta(hours=h))
+        for g, hours in (("a", [0, 0, 1, 5, 9]), ("b", [2, 3, 3, 4]))
+        for h in hours
+    ]
+    df = spark.createDataFrame(rows, "grp string, ts timestamp")
+    out = theilsen_trend(df, ts_col="ts", group_cols=["grp"], bucket="hour")
+    assert len(out.collect()) == 2
+    tree = _executed_tree(out._jdf.queryExecution().executedPlan().toString())
+    _assert_one_trend_kernel(tree)
+    assert "Join" not in tree, tree
+
+
+def test_cli_drift_report_runs_one_kernel_no_pair_table(spark, tmp_path):
+    """The executed plan of ``run_batch``'s drift-report write, read back
+    from the session's SQL execution store."""
+    from kafka_dead_letter_analyzer_spark.cli import AnalyzerConfig, run_batch
+
+    rows = [
+        FX.envelope(topic=topic, offset=i,
+                    timestamp=_TS + dt.timedelta(hours=i // 2),
+                    value_deadletter=FX.dead_letter_value())
+        for topic in ("a-dead-letters", "b-dead-letters")
+        for i in range(8)
+    ]
+    src = str(tmp_path / "raw")
+    FX.raw_frame(spark, rows).write.parquet(src)
+    out = str(tmp_path / "out")
+    cfg = AnalyzerConfig(batch_input=src, batch_output=out, drift_report=True)
+    run_batch(spark, cfg)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    plans = [
+        executions.apply(i).physicalPlanDescription()
+        for i in range(executions.size())
+    ]
+    [plan] = [p for p in plans if f"{out}/drift" in p]
+    _assert_one_trend_kernel(_executed_tree(plan))
