@@ -15,8 +15,10 @@ reproduces that surface:
   writing the four outputs as parquet — the harness this repo's driver and
   tests exercise.
 
-``--schema-registry-url`` is accepted for CLI compatibility; Avro decode
-engages only when spark-avro is on the classpath (documented divergence).
+``--schema-registry-url`` is accepted for CLI compatibility and never
+read: the S2 cascade decodes Confluent-framed Avro without a registry
+(the JVM ``from_avro`` when spark-avro is on the classpath, else the
+engine's own Python codec, ``functions/avro_codec.py``).
 The large-message serde (claim-check pattern + bakdata byte-flag wire
 protocol) lives in ``streaming/large_message.py`` — apply ``wire_decode``
 after the S2 cascade when input topics carry large-message-encoded values.
@@ -38,7 +40,7 @@ class AnalyzerConfig:
     checkpoint_dir: str = "/tmp/dead-letter-analyzer-checkpoints"
     batch_input: str | None = None
     batch_output: str | None = None
-    schema_registry_url: str | None = None  # accepted, unused without spark-avro
+    schema_registry_url: str | None = None  # accepted for CLI parity, never read
     rocksdb_state_store: bool = False  # reference store choice (Topology.java:220-226)
     drift_report: bool = False  # batch: also write the per-key drift report
 
@@ -213,7 +215,7 @@ def main(argv: list[str] | None = None) -> None:
 
     config = parse_args(argv)
     spark = get_spark(
-        app_name=config.app_id, rocksdb_state_store=config.rocksdb_state_store or None
+        app_name=config.app_id, rocksdb_state_store=config.rocksdb_state_store
     )
     if config.batch_input:
         if not config.batch_output:

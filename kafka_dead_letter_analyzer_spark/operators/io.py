@@ -125,13 +125,6 @@ def spread_for_cpu(df: DataFrame, min_partitions: int | None = None) -> DataFram
     keeps the no-extra-shuffle property exactly when the shuffle would
     actually hurt. (The check reads plan metadata only — no job runs.)
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        # measurement kill switch: lets bench A/B every call site
-        # (round-5 verdict asked for a per-site win/loss table; NOTES.md
-        # records the calibration results)
-        return df
     try:
         sc = df.sparkSession.sparkContext
         target = min_partitions or sc.defaultParallelism

@@ -38,20 +38,19 @@ def get_spark(
     cluster pass ``None`` with a pre-configured environment and only the
     SQL confs below are applied.
 
-    ``rocksdb_state_store`` (or env ``SPARK_GRAFT_ROCKSDB=1``) switches
-    streaming state to the RocksDB provider — the reference's store choice
+    ``rocksdb_state_store`` switches streaming state to the RocksDB
+    provider — the reference's store choice
     (DeadLetterAnalyzerTopology.java:220-226, Materialized.as(...) over
-    RocksDB-backed KeyValueStore). Off by default: the HDFS-backed in-memory
-    store is fine for test-sized state, RocksDB is the large-keyspace
-    (per-error-type cardinality at 100 TB) durability/memory answer.
+    RocksDB-backed KeyValueStore). Off by default (``None`` or ``False``):
+    the HDFS-backed in-memory store is fine for test-sized state, RocksDB
+    is the large-keyspace (per-error-type cardinality at 100 TB)
+    durability/memory answer.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
-    if rocksdb_state_store is None:
-        rocksdb_state_store = os.environ.get("SPARK_GRAFT_ROCKSDB", "") == "1"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -344,7 +344,7 @@ def streaming_error_statistics_ttl(
     FullErrorStatistics rows in update cadence; keys idle longer than the
     TTL are evicted by the store and restart on next arrival. Requires the
     RocksDB state-store provider (``get_spark(rocksdb_state_store=True)``
-    or ``SPARK_GRAFT_ROCKSDB=1``)."""
+    or ``--rocksdb-state-store``)."""
     keyed = enriched.select(
         F.col("error_key.topic").alias("topic"),
         F.col("error_key.type").alias("type"),

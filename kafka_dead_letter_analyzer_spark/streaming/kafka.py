@@ -13,15 +13,17 @@ Reference behavior being reproduced:
   (BruteForceSerde, DeadLetterAnalyzerTopology.java:102-105): try
   Schema-Registry Avro, fall back to string/bytes. Spark equivalent: a
   ``coalesce`` cascade of parse attempts per record — Confluent-wire Avro
-  (when the spark-avro package is on the classpath), then JSON, then the
+  (the JVM ``from_avro`` when the spark-avro package is on the classpath,
+  else the engine's own Arrow-batched Python codec), then JSON, then the
   raw UTF-8 text. Parsing is per-record fallible-by-construction (null on
   miss), so no record can kill the query — same guarantee BruteForceSerde
   provides.
 
 Sinks write ``kafka_key`` as the record key and the JSON rendering of the
-sink struct as the value. (The reference writes Schema-Registry Avro; Avro
-encode is applied instead when spark-avro is available — the claim-check
-large-message wrapping is a documented non-goal, SURVEY.md §7.5.)
+sink struct as the value, or Confluent-framed Avro (the reference's
+Schema-Registry encoding). With a ``large_message_threshold`` set,
+``kafka_sink_projection`` blob-backs oversized values through the
+claim-check wire formats of ``streaming/large_message.py``.
 
 Everything here is a column program over the Kafka source's fixed schema —
 each function also works on a *batch* DataFrame of the same shape, which is
