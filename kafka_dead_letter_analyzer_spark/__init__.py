@@ -25,13 +25,8 @@ def build_topology(raw):
     return _bt(raw)
 
 
-def build_streaming_topology(raw_stream):
-    """Streaming topology over a streaming RAW_ENVELOPE frame."""
-    from kafka_dead_letter_analyzer_spark.streaming import (
-        build_streaming_topology as _bst,
-    )
-
-    return _bst(raw_stream)
+# one wiring for batch and ``readStream`` frames
+build_streaming_topology = build_topology
 
 
 __all__ = ["get_spark", "build_topology", "build_streaming_topology"]

@@ -6,11 +6,12 @@ stats=...,examples=... --error-topic`` -> build topology -> start
 (DeadLetterAnalyzerApplication.java:43-71, README.md:32-41). This module
 reproduces that surface:
 
-- **streaming** (default): Kafka pattern source -> the streaming topology
-  -> four Kafka sinks; the error topic must match the input pattern so the
-  E3 loop closes through the broker. App id ``dead-letter-analyzer-<output
-  topic>`` becomes the checkpoint namespace + query-name prefix, exactly
-  the reference's app-id derivation (DeadLetterAnalyzerApplication.java:69-71).
+- **streaming** (default): Kafka pattern source -> the batch topology (one
+  wiring for both modes) -> four Kafka sinks; the error topic must match the
+  input pattern so the E3 loop closes through the broker. App id
+  ``dead-letter-analyzer-<output topic>`` becomes the checkpoint namespace
+  + query-name prefix, exactly the reference's app-id derivation
+  (DeadLetterAnalyzerApplication.java:69-71).
 - **batch**: the same topology over a RAW_ENVELOPE parquet directory,
   writing the four outputs as parquet — the harness this repo's driver and
   tests exercise.
@@ -179,16 +180,14 @@ def run_streaming(spark, config: AnalyzerConfig) -> list:
 
     The caller owns the lifecycle (``awaitAnyTermination`` for a service).
     """
-    from kafka_dead_letter_analyzer_spark.streaming import (
-        build_streaming_topology,
-        read_dead_letter_stream,
-    )
+    from kafka_dead_letter_analyzer_spark.plans.topology import build_topology
     from kafka_dead_letter_analyzer_spark.streaming.kafka import (
+        read_dead_letter_stream,
         write_stream_to_kafka,
     )
 
     raw = read_dead_letter_stream(spark, config.brokers, config.input_pattern)
-    topo = build_streaming_topology(raw)
+    topo = build_topology(raw)
     ck = f"{config.checkpoint_dir}/{config.app_id}"
     return [
         write_stream_to_kafka(

@@ -15,7 +15,9 @@ Spark shape: the Kafka source (``includeHeaders=true``) yields
 per record into ``map<string, binary>`` with ``map_from_entries`` under
 ``spark.sql.mapKeyDedupPolicy=LAST_WIN`` (set in session.py) — exactly
 last-wins, fully JVM-side. Presence and null-ness are then distinguishable
-via ``map_contains_key`` vs a NULL map value.
+via ``map_contains_key`` vs a NULL map value; the parsers
+(``operators/parsers.py``) build the int/long parses and their error
+messages from ``has_header`` and ``header_string``.
 
 Header-name constants: the reference imports these from public libraries —
 Apache Kafka Connect's DeadLetterQueueReporter (``__connect.errors.*``,
@@ -92,29 +94,3 @@ def header_string(hmap: Column, name: str) -> Column:
     """lastHeader(name) bytes -> UTF-8 string; NULL if absent or null-valued
     (HeaderHelper.java:36-44)."""
     return hmap.getItem(name).cast("string")
-
-
-def header_int(hmap: Column, name: str) -> Column:
-    """string -> int; NULL on malformed (HeaderHelper.java:46-48 — parse
-    failures surface as error values, not exceptions; ANSI-safe)."""
-    return header_string(hmap, name).try_cast("int")
-
-
-def header_long(hmap: Column, name: str) -> Column:
-    """string -> long; NULL on malformed (HeaderHelper.java:50-52)."""
-    return header_string(hmap, name).try_cast("long")
-
-
-def missing_required_header(hmap: Column, name: str) -> Column:
-    """NULL when present, else the reference's error message
-    (HeaderHelper.java:58-60)."""
-    return F.when(~has_header(hmap, name), F.lit(f"Missing required header {name}"))
-
-
-def null_value_error(hmap: Column, name: str, kind: str) -> Column:
-    """Present-but-null header that must parse as int/long
-    (HeaderHelper.java:46-52 null branch)."""
-    return F.when(
-        has_header(hmap, name) & hmap.getItem(name).isNull(),
-        F.lit(f"Cannot parse {kind} from null"),
-    )

@@ -13,14 +13,17 @@ Spark mapping (SURVEY.md §2.8):
   aggregation the reference doesn't have. At 100 TB this is the right shape:
   partial_count/min/max collapse each map partition to |keys| rows before
   the shuffle.
-- first example: Kafka Streams "first" is *arrival order*, which is not a
-  pure function of the data. Batch definition (documented refinement,
-  SURVEY.md §7.4): first by ``(context.timestamp, context.offset)`` —
-  deterministic, matches the reference tests' single-partition expectations.
-  Implemented as ``min_by`` over a sortable ``(ts, offset)`` key rather than
-  a window: one shuffle with partial aggregation instead of a full
-  partition-sort, which matters at scale (no per-group sort, no skew
-  amplification from big groups).
+- first example: one operator for both modes, ``min_by`` over the
+  ordering key ``(batch timestamp, context.timestamp, context.offset)``,
+  keeping only the keys whose winning row came in the current batch. In a
+  batch query the batch timestamp is one constant, so the order is
+  ``(ts, offset)`` (documented refinement of the reference's arrival order,
+  SURVEY.md §7.4). In a micro-batch it is the batch's own time: across
+  batches the first arrival wins, within one the least ``(ts, offset)``,
+  and each key is emitted once. ``min_by`` rather than a window: one
+  shuffle with partial aggregation instead of a full partition-sort, which
+  matters at scale (no per-group sort, no skew amplification from big
+  groups).
 """
 
 from __future__ import annotations
@@ -49,22 +52,47 @@ def error_statistics(enriched: DataFrame) -> DataFrame:
 
 
 def first_examples(enriched: DataFrame) -> DataFrame:
-    """First (ts, offset)-ordered record per (topic, type) — A1's example
-    side (ErrorAggregatingProcessor.java:59-65).
+    """First record per (topic, type) — A1's example side
+    (ErrorAggregatingProcessor.java:59-65) — in batch and stream alike.
 
-    ``min_by`` with a struct ordering key keeps this a single partial-agg
-    shuffle (no window sort).
+    ``min_by`` orders by ``(batch timestamp, ts, offset)`` and only keys
+    whose winner came in the current batch are kept. ``current_timestamp()``
+    is projected into a column before the ``groupBy``: a streaming query
+    turns it into the non-deterministic ``current_batch_timestamp()``,
+    which Spark rejects inside an aggregate's arguments. A batch
+    query sees one constant, so it emits every key's least ``(ts, offset)``
+    row. A micro-batch sees its own batch time (restored from the offset
+    log on restart), so a key's state keeps its first-arrival row and the
+    key is emitted once, in the batch where it first appears; this relies
+    on batch timestamps rising from one micro-batch to the next.
+
+    The streaming state is one example payload per key in the JVM state
+    store, bounded by error-type cardinality. It is not the state of the
+    earlier Python state machine (a per-key ``seen`` flag): a streaming
+    deployment must start ``<checkpoint>/examples`` fresh. Given the old
+    checkpoint, Spark 4.1 fails the query on its first micro-batch with
+    ``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA``; nothing
+    is emitted from the old state.
     """
+    batch_ts = "_batch_ts"
     order_key = F.struct(
-        F.col("context.timestamp").alias("ts"), F.col("context.offset").alias("offset")
+        F.col(batch_ts),
+        F.col("context.timestamp").alias("ts"),
+        F.col("context.offset").alias("offset"),
     )
-    payload = F.struct(F.col("context").alias("context"), F.col("dead_letter").alias("dead_letter"))
+    payload = F.struct(
+        F.col(batch_ts),
+        F.col("context").alias("context"),
+        F.col("dead_letter").alias("dead_letter"),
+    )
     return (
-        enriched.groupBy(
+        enriched.withColumn(batch_ts, F.current_timestamp())
+        .groupBy(
             F.col("error_key.topic").alias("topic"),
             F.col("error_key.type").alias("type"),
         )
         .agg(F.min_by(payload, order_key).alias("example"))
+        .filter(F.col(f"example.{batch_ts}") == F.current_timestamp())
         .select(
             "topic",
             "type",

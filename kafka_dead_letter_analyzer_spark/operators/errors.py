@@ -29,8 +29,6 @@ first line.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -106,15 +104,3 @@ def error_to_dead_letter(
         F.lit(None).cast("timestamp").alias("input_timestamp"),
     )
     return err_df.withColumn("dead_letter", dead_letter).drop(ERROR_COL)
-
-
-def union_all(frames: Sequence[DataFrame]) -> DataFrame:
-    """U1 merge: bag-semantics union by name (DeadLetterAnalyzerTopology.java:182-184).
-
-    ``unionByName`` (never positional ``union``) because branches are
-    independently derived (SURVEY.md §2.6).
-    """
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out

@@ -70,7 +70,6 @@ _CANDIDATES_CACHE: list = []
 
 CONVERT_ERROR_DESC = "Error converting errors to dead letters"  # Topology.java:133
 ANALYZE_ERROR_DESC = "Error analyzing dead letter"  # Topology.java:120
-AGGREGATE_ERROR_DESC = "Error aggregating dead letters"  # Topology.java:214
 
 
 @dataclass

@@ -1,23 +1,23 @@
 """Structured Streaming layer: the reference's native execution mode.
 
 The batch operators (plans/topology.py) are pure column programs, so they
-run unchanged under ``readStream``; this package adds only what genuinely
-differs in streaming:
+run unchanged under ``readStream``: ``build_streaming_topology`` is
+``build_topology``, and A1's statistics and first examples are the batch
+aggregates, run in update mode on the JVM state store. This package adds
+only what genuinely differs in streaming:
 
 - ``kafka``: source/sink wiring (subscribePattern, includeHeaders, the S2
   brute-force decode cascade, sink encodings, the E3 error-topic loop).
-- ``engine``: the stateful pieces — update-mode statistics and the
-  arrival-order first-example operator (``applyInPandasWithState``).
+- ``large_message``: the claim-check serde.
+- ``engine``: the one-consumption stateless ``foreachBatch`` query and
+  the catalog's stateful streaming extensions.
 """
 
 from kafka_dead_letter_analyzer_spark.streaming.engine import (
-    StreamingTopology,
     build_streaming_topology,
     start_stateless_outputs,
-    streaming_error_statistics,
     streaming_error_statistics_per_record,
     streaming_dedup_records,
-    streaming_first_examples,
     streaming_interval_join,
     streaming_threshold_alerts,
     streaming_topk_types,
@@ -46,13 +46,10 @@ __all__ = [
     "header_encode",
     "wire_decode",
     "wire_encode",
-    "StreamingTopology",
     "build_streaming_topology",
     "start_stateless_outputs",
-    "streaming_error_statistics",
     "streaming_error_statistics_per_record",
     "streaming_dedup_records",
-    "streaming_first_examples",
     "streaming_interval_join",
     "streaming_threshold_alerts",
     "streaming_topk_types",

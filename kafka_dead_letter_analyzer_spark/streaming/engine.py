@@ -1,10 +1,12 @@
-"""Streaming topology: the stateful operators that differ from batch.
+"""Streaming layer: the analyzer's wiring re-exported for ``readStream``,
+plus the catalog's stateful streaming extensions.
 
-The stateless 80% of the dataflow (dialect routing, parsing, enrichment,
-sink projections) is the SAME column program as batch —
-``plans/topology.py`` functions run unchanged on a streaming frame. What
-this module adds is the reference's one stateful operator (A1,
-ErrorAggregatingProcessor.java:38-102) in its two streaming halves:
+The analyzer's dataflow (dialect routing, parsing, enrichment, A1, sink
+projections) is the SAME column program as batch:
+``build_streaming_topology`` *is* ``plans.topology.build_topology``.
+Its one stateful operator (A1, ErrorAggregatingProcessor.java:38-102)
+runs in its two streaming halves on the batch operators
+(``operators/aggregate.py``):
 
 - statistics: ``groupBy(topic, type).agg(count/min/max)`` in UPDATE output
   mode. Spark's state store replaces the reference's RocksDB ``statistics``
@@ -12,152 +14,39 @@ ErrorAggregatingProcessor.java:38-102) in its two streaming halves:
   per-micro-batch instead of per-record — downstream consumption is upsert
   either way (README.md:116), so the last value per key is identical.
 - first example: Kafka Streams "first" is ARRIVAL order
-  (ErrorAggregatingProcessor.java:59-65) — a property of the stream, not
-  of the data, so it genuinely needs custom state:
-  ``applyInPandasWithState`` with a per-key ``seen`` flag. Batch mode
-  approximates this with a deterministic (ts, offset) order
-  (operators/aggregate.py, SURVEY.md §7.4); streaming preserves the real
-  semantics: the first record to REACH the operator wins and is emitted
-  exactly once.
+  (ErrorAggregatingProcessor.java:59-65). ``first_examples`` orders its
+  ``min_by`` by (batch timestamp, ts, offset), so the first micro-batch to
+  carry a key wins, the least (ts, offset) wins within it, and the key is
+  emitted exactly once, restarts included.
 
-State-size note for 100 TB: state is one boolean per distinct
-(topic, type) — bounded by error-type cardinality, not traffic. The stats
-state is three scalars per key. Neither needs TTL (the reference's store
-is likewise unbounded and tiny).
+State-size note for 100 TB: the examples state is one example payload per
+distinct (topic, type) in the JVM state store; the stats state is three
+scalars per key. Both are bounded by error-type cardinality, not traffic,
+and neither needs TTL (the reference's store is likewise unbounded and
+tiny).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafka_dead_letter_analyzer_spark.operators.aggregate import error_statistics
-from kafka_dead_letter_analyzer_spark.operators.project import (
-    to_full_dead_letters,
-    to_full_error_statistics,
+from kafka_dead_letter_analyzer_spark.operators.project import to_full_dead_letters
+from kafka_dead_letter_analyzer_spark.plans.topology import (
+    build_topology,
+    enrich_and_route_errors,
 )
-from kafka_dead_letter_analyzer_spark.plans.topology import enrich_and_route_errors
 from kafka_dead_letter_analyzer_spark.functions.formatting import (
     format_timestamp,
     stats_key,
 )
-from kafka_dead_letter_analyzer_spark.schemas import (
-    EXAMPLE_DEAD_LETTER_WITH_CONTEXT,
-)
-
-streaming_error_statistics = error_statistics  # same plan; run in UPDATE mode
-
-
-# ---------------------------------------------------------------------------
-# First example with true arrival-order semantics
-# ---------------------------------------------------------------------------
-
-_EXAMPLE_IN = T.StructType(
-    [
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("offset", T.LongType(), True),
-        T.StructField("example_json", T.StringType(), False),
-    ]
-)
-
-_EXAMPLE_OUT = T.StructType(
-    [
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),
-        T.StructField("example_json", T.StringType(), False),
-    ]
-)
-
-_EXAMPLE_STATE = T.StructType([T.StructField("seen", T.BooleanType(), False)])
-
-
-def _first_example_fn(key, pdfs, state) -> Iterator:
-    """Emit the key's example row exactly once: on its first-ever arrival.
-
-    The example payload crosses the Arrow boundary as a JSON string —
-    nested structs stay in the JVM; state is a single boolean per key.
-    Within one micro-batch, the least (ts, offset) wins, across all of the
-    key's Arrow chunks; across batches, arrival order rules (the
-    reference's semantics).
-    """
-    import numpy as np
-    import pandas as pd
-
-    if state.exists:
-        for _ in pdfs:
-            pass
-        return
-    first = None
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        ts, offset = pdf["ts"].to_numpy(), pdf["offset"].to_numpy()
-        i = np.lexsort((offset, ts))[0]
-        if first is None or (ts[i], offset[i]) < first[:2]:
-            first = (ts[i], offset[i], pdf["example_json"].iat[i])
-    if first is None:
-        return
-    state.update((True,))
-    yield pd.DataFrame(
-        {
-            "topic": [key[0]],
-            "type": [key[1]],
-            "example_json": [first[2]],
-        }
-    )
-
-
-def streaming_first_examples(enriched: DataFrame) -> DataFrame:
-    """A1's example side under streaming: first-arrival record per
-    (topic, type), emitted exactly once, as ErrorExample sink rows
-    (sink/ErrorExample.avsc shape — kafka_key, example, topic, type)."""
-    example_struct = F.struct(
-        F.col("context.key").alias("key"),
-        F.col("context.offset").alias("offset"),
-        F.col("context.partition").alias("partition"),
-        format_timestamp(F.col("context.timestamp")).alias("timestamp"),
-        F.col("dead_letter").alias("dead_letter"),
-    )
-    keyed = enriched.select(
-        F.col("error_key.topic").alias("topic"),
-        F.col("error_key.type").alias("type"),
-        F.col("context.timestamp").alias("ts"),
-        F.col("context.offset").alias("offset"),
-        F.to_json(example_struct).alias("example_json"),
-    )
-    out = keyed.groupBy("topic", "type").applyInPandasWithState(
-        _first_example_fn,
-        outputStructType=_EXAMPLE_OUT,
-        stateStructType=_EXAMPLE_STATE,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-    return out.select(
-        stats_key(F.col("topic"), F.col("type")).alias("kafka_key"),
-        F.from_json("example_json", EXAMPLE_DEAD_LETTER_WITH_CONTEXT).alias("example"),
-        "topic",
-        "type",
-    )
-
 
 # ---------------------------------------------------------------------------
 # Per-record stats emission (exact reference cadence)
 # ---------------------------------------------------------------------------
-
-_STATS_IN = T.StructType(
-    [
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("offset", T.LongType(), True),
-    ]
-)
 
 _STATS_OUT = T.StructType(
     [
@@ -227,10 +116,10 @@ def _per_record_stats_fn(key, pdfs, state) -> Iterator:
 
 def streaming_error_statistics_per_record(enriched: DataFrame) -> DataFrame:
     """A1 stats with the reference's exact one-output-per-input cadence
-    (vs. :func:`streaming_error_statistics`, which emits the converged
-    value per key per micro-batch — same final state, fewer rows). Use
-    this when downstream consumes the full update stream rather than
-    upserting. Output: FullErrorStatistics sink rows."""
+    (vs. ``operators.aggregate.error_statistics``, which emits the
+    converged value per key per micro-batch — same final state, fewer
+    rows). Use this when downstream consumes the full update stream rather
+    than upserting. Output: FullErrorStatistics sink rows."""
     keyed = enriched.select(
         F.col("error_key.topic").alias("topic"),
         F.col("error_key.type").alias("type"),
@@ -604,16 +493,6 @@ def streaming_interval_join(
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class StreamingTopology:
-    """The four output streams and the writeStream mode each requires."""
-
-    full_dead_letters: DataFrame  # append
-    error_statistics: DataFrame  # update (upsert downstream)
-    error_examples: DataFrame  # update (emits once per key)
-    error_topic: DataFrame  # append; loops back via the broker (E3)
-
-
 def start_stateless_outputs(
     raw_stream: DataFrame,
     write_full,
@@ -662,21 +541,8 @@ def _stateless_outputs(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     return to_full_dead_letters(enriched), error_topic
 
 
-def build_streaming_topology(raw_stream: DataFrame) -> StreamingTopology:
-    """Wire the complete dataflow over a streaming RAW_ENVELOPE frame.
-
-    Identical wiring to the batch ``build_topology`` (SURVEY.md §3.2)
-    except A1's two halves use the streaming operators above.
-    """
-    enriched, error_topic = enrich_and_route_errors(raw_stream)
-    return StreamingTopology(
-        full_dead_letters=to_full_dead_letters(enriched),
-        error_statistics=to_full_error_statistics(
-            streaming_error_statistics(enriched)
-        ),
-        error_examples=streaming_first_examples(enriched),
-        error_topic=error_topic,
-    )
+# The analyzer's wiring is one program for both modes (SURVEY.md §3.2).
+build_streaming_topology = build_topology
 
 
 # ---------------------------------------------------------------------------

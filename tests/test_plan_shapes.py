@@ -15,7 +15,6 @@ import json
 import re
 from collections import Counter
 
-import pandas as pd
 import pytest
 
 from kafka_dead_letter_analyzer_spark.functions.avro_codec import (
@@ -1729,6 +1728,37 @@ def test_each_streaming_output_decodes_once(spark, kafka_parquet, tmp_path):
     assert shapes == {attr: (1, 1) for attr in plans}, shapes
 
 
+def test_streaming_examples_one_jvm_state_operator(spark, kafka_parquet, tmp_path):
+    """The examples query keeps its first-example state in the JVM: one
+    ``min_by`` aggregate with one state store, no Python state machine,
+    and still one decode and one scan per micro-batch."""
+    from kafka_dead_letter_analyzer_spark.streaming.engine import (
+        build_streaming_topology,
+    )
+    from kafka_dead_letter_analyzer_spark.streaming.kafka import (
+        decode_kafka_records,
+        kafka_sink_projection,
+    )
+
+    raw = spark.readStream.schema(KAFKA_DDL).parquet(kafka_parquet)
+    topo = build_streaming_topology(decode_kafka_records(raw, use_avro="python"))
+    q = (
+        kafka_sink_projection(topo.error_examples)
+        .writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "examples"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        q.stop()
+    nodes = ("FlatMapGroupsInPandasWithState", "StateStoreSave",
+             "ArrowEvalPython", "Scan parquet")
+    assert {n: _count(plan, n) for n in nodes} == dict(zip(nodes, (0, 1, 1, 1)))
+
+
 def test_batch_error_topic_scans_source_once(spark, kafka_parquet):
     from kafka_dead_letter_analyzer_spark.plans.topology import build_topology
     from kafka_dead_letter_analyzer_spark.streaming.kafka import (
@@ -1811,56 +1841,6 @@ def test_single_pass_error_topic_bag(spark):
              'For input string: "t"', f'{nfe}: For input string: "t"'),
         ]
     )
-
-
-class _State:
-    def __init__(self, exists: bool):
-        self.exists = exists
-        self.updates = []
-
-    def update(self, value):
-        self.updates.append(value)
-
-
-def _chunk(rows):
-    return pd.DataFrame(
-        {
-            "topic": ["t"] * len(rows),
-            "type": ["e"] * len(rows),
-            "ts": pd.to_datetime([r[0] for r in rows]),
-            "offset": pd.Series([r[1] for r in rows], dtype="int64"),
-            "example_json": [r[2] for r in rows],
-        }
-    )
-
-
-def test_first_example_tie_break_across_chunks():
-    """Least (ts, offset) wins: on equal ts the lower offset, and the
-    minimum is taken across the key's Arrow chunks."""
-    from kafka_dead_letter_analyzer_spark.streaming.engine import _first_example_fn
-
-    state = _State(exists=False)
-    chunks = [
-        _chunk([("2024-01-01 00:00:02", 1, "late"),
-                ("2024-01-01 00:00:01", 9, "tie-high")]),
-        _chunk([]),
-        _chunk([("2024-01-01 00:00:01", 4, "tie-low"),
-                ("2024-01-01 00:00:03", 0, "latest")]),
-    ]
-    [out] = list(_first_example_fn(("t", "e"), iter(chunks), state))
-    assert out.to_dict("records") == [
-        {"topic": "t", "type": "e", "example_json": "tie-low"}
-    ]
-    assert state.updates == [(True,)]
-
-
-def test_first_example_emits_nothing_once_seen():
-    from kafka_dead_letter_analyzer_spark.streaming.engine import _first_example_fn
-
-    state = _State(exists=True)
-    chunk = _chunk([("2024-01-01 00:00:00", 0, "x")])
-    assert list(_first_example_fn(("t", "e"), iter([chunk]), state)) == []
-    assert state.updates == []
 
 
 # ---------------------------------------------------------------------------

@@ -298,6 +298,105 @@ def test_streaming_first_example_intra_batch_tiebreak(spark, tmp_path, ts):
     assert row["example"]["key"] == "earlier"
 
 
+def test_streaming_first_example_equal_ts_tiebreak_across_partitions(
+    spark, tmp_path, ts
+):
+    """One micro-batch over two files (two scan partitions): on equal ts
+    the lower offset wins even when it sits in the later partition, and
+    the key is emitted once."""
+    src = str(tmp_path / "src")
+    _write_envelopes(spark, src, [
+        FX.envelope(offset=9, key="tie-high", timestamp=ts(1),
+                    value_deadletter=FX.dead_letter_value()),
+    ])
+    _write_envelopes(spark, src, [
+        FX.envelope(offset=4, key="tie-low", timestamp=ts(1),
+                    value_deadletter=FX.dead_letter_value()),
+        FX.envelope(offset=0, key="latest", timestamp=ts(3),
+                    value_deadletter=FX.dead_letter_value()),
+    ])
+    assert spark.read.parquet(src).rdd.getNumPartitions() == 2
+    raw = spark.readStream.schema(RAW_ENVELOPE).parquet(src)
+    q = (
+        build_streaming_topology(raw)
+        .error_examples.writeStream.format("memory")
+        .queryName("examples_tie_partitions")
+        .outputMode("update")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert len(q.recentProgress) == 1  # both files in one micro-batch
+    finally:
+        q.stop()
+    [row] = spark.table("examples_tie_partitions").collect()
+    assert (row["example"]["key"], row["example"]["offset"]) == ("tie-low", 4)
+
+
+def _drain_examples(spark, src: str, name: str, **options) -> tuple[list, int]:
+    """(examples rows, micro-batches that read input) of one drain."""
+    reader = spark.readStream.schema(RAW_ENVELOPE)
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    q = (
+        build_streaming_topology(reader.parquet(src))
+        .error_examples.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        batches = sum(p.numInputRows > 0 for p in q.recentProgress)
+    finally:
+        q.stop()
+    return spark.table(name).collect(), batches
+
+
+def test_streaming_examples_equal_batch_however_backlog_is_split(
+    spark, tmp_path, ts
+):
+    """A backlog of three files, timestamps rising in file order, keys
+    spread across the files: drained one file per micro-batch or all in
+    one, the stream emits every key once and the rows equal the batch
+    topology's examples over the same records."""
+    def row(i: int, file: int, topic: str, frame: int):
+        trace = (
+            "java.lang.RuntimeException: boom\n"
+            f"\tat com.example.App.m{frame}(App.java:{frame})\n"
+        )
+        return FX.envelope(
+            topic=topic, offset=10 * file + i, key=f"f{file}-r{i}",
+            timestamp=ts(10 * file + i % 3),
+            value_deadletter=FX.dead_letter_value(stack_trace=trace),
+        )
+
+    files = [
+        [row(i, f, topic, frame)
+         for i, (topic, frame) in enumerate(
+             [("a-dead-letters", f), ("a-dead-letters", f + 1),
+              ("b-dead-letters", 1), ("b-dead-letters", f + 2)])]
+        for f in range(3)
+    ]
+    src = str(tmp_path / "src")
+    for rows in files:
+        _write_envelopes(spark, src, rows)
+    expect = build_topology(
+        FX.raw_frame(spark, [r for rows in files for r in rows])
+    ).error_examples.collect()
+    assert len(expect) == 8  # new keys in every file
+
+    for name, options, batches in (
+        ("examples_split_1", {"maxFilesPerTrigger": 1}, 3),
+        ("examples_split_all", {}, 1),
+    ):
+        got, ran = _drain_examples(spark, src, name, **options)
+        assert ran == batches, name
+        keys = [r["kafka_key"] for r in got]
+        assert len(keys) == len(set(keys)), (name, keys)
+        assert sorted(got) == sorted(expect), name
+
+
 def test_streaming_full_output_appends(spark, tmp_path, ts):
     batch = [
         FX.envelope(offset=0, timestamp=ts(0), value_deadletter=FX.dead_letter_value()),
