@@ -157,8 +157,10 @@ def run_batch(spark, config: AnalyzerConfig) -> dict[str, str]:
         # cap, day otherwise (a long-retention feed must not raise)
         bucket = _pick_report_bucket(feed, "event_ts")
         groups = ["topic", "type"]
-        # the detectors' shared contraction, released once the report
-        # is written so a long session keeps no cached frame per job
+        # the report's one (group, bucket) contraction: its span probe
+        # and its single kernel pass over all four detectors both read
+        # it; released once the report is written so a long session
+        # keeps no cached frame per job
         counts = bucket_counts(
             feed, ts_col="event_ts", group_cols=groups, bucket=bucket
         ).persist()

@@ -15,8 +15,8 @@ Both operators here are re-derived as exact integer algebra:
   bucket count ``B`` so the reference rate ``total/B`` never becomes
   a float), and the textbook recursive ``max(0, S_{t-1} + x - ref)``
   becomes the prefix-sum-minus-running-min identity
-  ``D_t = S_t - min_{j<=t} S_j`` — two windows over the per-bucket
-  contraction, no recursion, no single-task stage when grouped.
+  ``D_t = S_t - min_{j<=t} S_j`` — cumulative sums and running
+  extremes over the group's nonempty buckets, no recursion.
 * ``tvd_drift`` is the L1 half-distance between the category mix of
   the early and late halves of the stream,
   ``TVD = sum |c1/n1 - c2/n2| / 2``, cleared of denominators as
@@ -27,29 +27,28 @@ Both emit ppm fixed-points via the same TWO-STEP LONG DIVISION as
 (num*1000 mod nt)*1000 div nt``), so no intermediate exceeds
 ``nt * 1000`` and the surface stays BIGINT-exact on any engine.
 
-Scale shapes: cusum's only full-data shuffle is the (group, bucket)
-count; every window runs over the bucket contraction (per group when
-grouped — parallel across groups; global form sorts the bounded
-bucket domain, fine for time ranges, documented).  tvd's only
-shuffle is the (group, category) conditional-count contraction; the
-split point arrives as a 1-row broadcast anchor (no driver action).
-Int64 bounds (all RUNTIME-GUARDED since round 8 — a zero-cost
-``raise_error`` CASE over the exact per-group counts on the agg row,
-so a silent wrap can never escape as a plausible number): cusum needs
-``n * buckets * 1000`` to fit (9e18 — holds to ~1e10 rows x 1e5
-buckets); tvd needs ``2 * n1 * n2 * 1000`` to fit (holds to ~68M
-balanced rows per half per group; shard past that); wasserstein additionally
-carries the value span (``n1 * n2 * span * 1000``).  Each raise names
-the sharding remedy.
+Timeline detectors (CUSUM, Hampel, Theil-Sen, Mann-Kendall): the only
+full-data shuffle is the sparse ``(group, bucket)`` count contraction
+(:func:`bucket_counts`).  Each group's contraction rows then go whole
+to ONE ``applyInPandas`` call of an exact per-group numpy kernel
+(``_cusum_kernel``, ``_hampel_kernel``, ``_trend_kernel``, run by
+``_kernel_pass``): the group's timeline is at most ``max_buckets``
+longs, densifies in worker memory where a detector needs it, and no
+window, timeline join or pair row ever reaches Spark.  Parallel across
+groups; the global form groups by a constant key.
+``dead_letter_drift_report`` runs all four kernels in one such pass.
+tvd's only shuffle is the (group, category) conditional-count
+contraction; the split point arrives as a 1-row broadcast anchor (no
+driver action).
 
-The pairwise trend statistics — Theil-Sen's median slope and
-Mann-Kendall's sign sum over every ``t1 < t2`` bucket pair — share one
-exact per-group numpy kernel (``_trend_kernel``) that ``applyInPandas``
-runs over the ``(group, bucket)`` contraction: the group's dense
-timeline is at most ``max_buckets`` longs, its O(B^2) pairs live and die
-inside one Python worker as int64 vectors, and nothing quadratic is ever
-shuffled or sorted by Spark.  ``dead_letter_drift_report`` builds that
-contraction once and feeds CUSUM, Hampel and one kernel pass from it.
+Int64 bounds (each RUNTIME-GUARDED over the exact per-group counts, so
+a silent wrap can never escape as a plausible number): cusum needs
+``n * buckets * 1000`` to fit (9e18 — holds to ~1e10 rows x 1e5
+buckets) and its kernel raises before forming any product past it;
+tvd needs ``2 * n1 * n2 * 1000`` to fit (holds to ~68M balanced rows
+per half per group; shard past that), a zero-cost ``raise_error`` CASE
+on the agg row; wasserstein additionally carries the value span
+(``n1 * n2 * span * 1000``).  Each raise names the sharding remedy.
 """
 
 from __future__ import annotations
@@ -57,9 +56,10 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from kafka_dead_letter_analyzer_spark import cache_registry
 from kafka_dead_letter_analyzer_spark.operators.common import (
@@ -84,9 +84,26 @@ _BUCKET_US = {
     "minute": 60_000_000,
 }
 
-#: int64 ceiling used by the raise_error overflow guards; module-level
-#: so tests can monkeypatch it down to trigger the raise cheaply.
+#: int64 ceiling used by the overflow guards; module-level so tests can
+#: monkeypatch it down to trigger the raise cheaply.  Read on the driver
+#: at construction time: a kernel gets it through its closure, because a
+#: Python worker re-imports this module and would see the real ceiling.
 _I64_MAX = 9223372036854775807
+
+
+def _bucket_us(bucket: str, who: str) -> int:
+    if bucket not in _BUCKET_US:
+        raise ValueError(
+            f"{who}: bucket must be one of {sorted(_BUCKET_US)},"
+            f" got {bucket!r}"
+        )
+    return _BUCKET_US[bucket]
+
+
+def _ppm(num: int, nt: int) -> int:
+    """Python-int twin of :func:`_ppm2`: ``floor(num * 1e6 / nt)``."""
+    d1, r = divmod(num * 1000, nt)
+    return d1 * 1000 + r * 1000 // nt
 
 
 def _ppm2(num: str, nt: str) -> str:
@@ -119,25 +136,36 @@ def bucket_counts(
     per detector, and letting the span-probe driver actions
     (theilsen/hampel/mann-kendall run one each at construction time)
     hit the cache instead of re-scanning the raw input."""
-    if bucket not in _BUCKET_US:
-        raise ValueError(
-            f"bucket_counts: bucket must be one of {sorted(_BUCKET_US)},"
-            f" got {bucket!r}"
-        )
-    return _bucket_counts(df, ts_col, list(group_cols or []), _BUCKET_US[bucket])
+    bus = _bucket_us(bucket, "bucket_counts")
+    return _bucket_counts(df, ts_col, list(group_cols or []), bus)
 
 
 def _bucket_counts(
-    df: DataFrame, ts_col: str, groups: list, bus: int
+    df: DataFrame,
+    ts_col: str,
+    groups: list,
+    bus: int,
+    weight_expr: str | None = None,
 ) -> DataFrame:
+    """:func:`bucket_counts`; with ``weight_expr``, ``x`` is the
+    bucket's sum of the non-NULL, non-negative weights (rows with any
+    other weight are dropped)."""
+    base = df.filter(F.col(ts_col).isNotNull())
+    if weight_expr is not None:
+        base = base.filter(
+            F.expr(f"({weight_expr}) IS NOT NULL AND ({weight_expr}) >= 0")
+        )
     return (
-        df.filter(F.col(ts_col).isNotNull())
-        .select(
-            *[df[g] for g in groups],
+        base.select(
+            *[base[g] for g in groups],
             F.expr(f"unix_micros({ts_col}) DIV {bus}").alias("t"),
+            *([F.expr(weight_expr).alias("__w")] if weight_expr else []),
         )
         .groupBy(*groups, "t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
+        .agg(
+            (F.sum(F.expr("CAST(__w AS BIGINT)")) if weight_expr
+             else F.count(F.lit(1))).cast("bigint").alias("x")
+        )
     )
 
 
@@ -216,10 +244,9 @@ def _span_guard(
     who: str,
     bucket: str,
     remedy: str,
-) -> DataFrame:
+) -> None:
     """Raise when any group's densified span exceeds ``max_buckets``
-    (one memoized probe, see :func:`_worst_span_buckets`); returns the
-    per-group ``(t_lo, t_hi)`` span frame."""
+    (one memoized probe, see :func:`_worst_span_buckets`)."""
     span = counts.groupBy(*groups).agg(
         F.min("t").alias("t_lo"), F.max("t").alias("t_hi")
     )
@@ -229,7 +256,91 @@ def _span_guard(
             f"{who}: a group spans {worst} {bucket} buckets"
             f" (> max_buckets={max_buckets}); {remedy}"
         )
-    return span
+
+
+def _densify(t: np.ndarray, x: np.ndarray) -> tuple[int, np.ndarray]:
+    """``(lo, dense)``: a group's sparse rows over ``[min t, max t]``,
+    zeros for the empty buckets (``dense[i]`` is bucket ``lo + i``)."""
+    t = np.asarray(t, dtype=np.int64)
+    lo = int(t.min())
+    dense = np.zeros(int(t.max()) - lo + 1, dtype=np.int64)
+    dense[t - lo] = np.asarray(x, dtype=np.int64)
+    return lo, dense
+
+
+def _cusum_kernel(t: np.ndarray, x: np.ndarray, i64_max: int) -> dict:
+    """CUSUM of ONE group from its sparse contraction rows ``(t, x)``
+    (distinct bucket indices, any order): ``n``, ``buckets``, the
+    change-point bucket indices ``up_t``/``down_t`` and
+    ``up_ppm``/``down_ppm`` — the algebra of :func:`cusum_changepoint`'s
+    docstring over the nonempty buckets only, exact in int64.
+    ``np.argmax`` over rows sorted by ``t`` takes the EARLIEST bucket on
+    ties.  Raises, naming the remedy, when ``n * buckets * 1000`` would
+    exceed ``i64_max`` — before any product is formed."""
+    order = np.argsort(t)
+    t = np.asarray(t, dtype=np.int64)[order]
+    x = np.asarray(x, dtype=np.int64)[order]
+    ti = t - t[0] + 1
+    b = int(ti[-1])
+    n = int(x.sum())
+    if n > i64_max // 1000 // b:
+        raise ValueError(
+            "cusum_changepoint: a group exceeds the n * buckets * 1000"
+            " < 2^63 exactness bound; shard the input (e.g. by time"
+            " range) or coarsen the bucket"
+        )
+    p = np.cumsum(x)
+    s = p * b - ti * n
+    pre = (p - x) * b - (ti - 1) * n
+    up = s - np.minimum.accumulate(pre)
+    # S_0 = 0 is always in the prefix: maxima of S live at post-values
+    # (S jumps up only where mass lands)
+    peak = np.maximum.accumulate(np.concatenate(([0], s[:-1])))
+    down = peak - pre
+    # the final post-value S_B = 0 is a trough too (the last bucket
+    # under-runs the mean)
+    down[-1] = max(down[-1], peak[-1])
+    iu, idn = int(np.argmax(up)), int(np.argmax(down))
+    return {
+        "n": n,
+        "buckets": b,
+        "up_t": int(t[iu]),
+        "up_ppm": _ppm(int(up[iu]), n * b),
+        "down_t": int(t[idn]),
+        "down_ppm": _ppm(int(down[idn]), n * b),
+    }
+
+
+def _hampel_kernel(
+    dense: np.ndarray, half_window: int, k_num: int, k_den: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(med, mad, flagged)`` for every bucket of a dense timeline:
+    the lower median of the ``±half_window`` window, the lower median
+    of the window's ``|v - med|``, and ``k_den * |x - med| > k_num *
+    mad``.  The first and last ``half_window`` buckets see the shorter
+    windows their available neighbors give.  Full interior windows are
+    sorted as one strided view, in row chunks that bound the memory;
+    only the at most ``2 * half_window`` edge buckets loop."""
+    b, h = len(dense), half_window
+    w = 2 * h + 1
+    med = np.empty(b, dtype=np.int64)
+    mad = np.empty(b, dtype=np.int64)
+    if b >= w:
+        windows = np.lib.stride_tricks.sliding_window_view(dense, w)
+        step = max(1, (1 << 20) // w)
+        for i in range(0, len(windows), step):
+            win = np.sort(windows[i:i + step], axis=1)
+            m = win[:, h]
+            med[h + i:h + i + len(m)] = m
+            mad[h + i:h + i + len(m)] = np.sort(
+                np.abs(win - m[:, None]), axis=1
+            )[:, h]
+    for i in (*range(min(h, b)), *range(max(b - h, h), b)):
+        win = np.sort(dense[max(0, i - h):i + h + 1])
+        k = (len(win) + 1) // 2 - 1
+        med[i] = win[k]
+        mad[i] = np.sort(np.abs(win - win[k]))[k]
+    return med, mad, k_den * np.abs(dense - med) > k_num * mad
 
 
 def _trend_kernel(t: np.ndarray, x: np.ndarray) -> dict | None:
@@ -241,20 +352,18 @@ def _trend_kernel(t: np.ndarray, x: np.ndarray) -> dict | None:
     buckets; pairs are enumerated lag by lag (``dx = d`` for every
     ``dy = x[i + d] - x[i]``).  Theil-Sen's slope is the lower-median
     pair under the order ``(q, dy, dx)`` with ``q`` the IEEE-double
-    quotient ``float(dy) / float(dx)`` — the order the SQL form's
-    ``row_number`` window uses — found by ``np.partition`` on ``q`` and
-    a ``(dy, dx)`` sort of the pairs tied with the selected quotient
-    only.  Mann-Kendall's ``s_stat`` is the sum of ``sign(dy)`` over
-    the same pairs and ``var18 = B(B-1)(2B+5) - sum m(m-1)(2m+5)``
-    over the multiplicities ``m`` of repeated dense counts.  A group
-    with fewer than two buckets has no pairs: returns ``None``."""
-    t = np.asarray(t, dtype=np.int64)
-    lo = int(t.min())
-    b = int(t.max()) - lo + 1
+    quotient ``float(dy) / float(dx)`` — the order a SQL
+    ``row_number`` window over the pairs would use — found by
+    ``np.partition`` on ``q`` and a ``(dy, dx)`` sort of the pairs tied
+    with the selected quotient only.  Mann-Kendall's ``s_stat`` is the
+    sum of ``sign(dy)`` over the same pairs and ``var18 = B(B-1)(2B+5)
+    - sum m(m-1)(2m+5)`` over the multiplicities ``m`` of repeated
+    dense counts.  A group with fewer than two buckets has no pairs:
+    returns ``None``."""
+    _, dense = _densify(t, x)
+    b = len(dense)
     if b < 2:
         return None
-    dense = np.zeros(b, dtype=np.int64)
-    dense[t - lo] = np.asarray(x, dtype=np.int64)
     lags = np.arange(1, b, dtype=np.int64)
     dx = np.repeat(lags, b - lags)
     dy = np.concatenate([dense[d:] - dense[:-d] for d in range(1, b)])
@@ -276,31 +385,73 @@ def _trend_kernel(t: np.ndarray, x: np.ndarray) -> dict | None:
     }
 
 
-def _trend_stats(
-    counts: DataFrame, groups: list, cols: Sequence[str]
+def _kernel_pass(
+    counts: DataFrame, groups: list, fields: Sequence[StructField], fn
 ) -> DataFrame:
-    """Run :func:`_trend_kernel` once per group over the bucket
-    contraction — ``(*groups, *cols)`` with ``cols`` a subset of the
-    kernel's BIGINT statistics; groups with fewer than two buckets emit
-    no row.  The global form groups by a constant key."""
-    key = groups or ["__trend_key"]
+    """One ``applyInPandas`` pass over the bucket contraction:
+    ``fn(t, x)`` gets a group's sparse rows and returns its output rows
+    as a dict of equal-length columns named by ``fields`` (a column of
+    ``None`` values is NULL).  Returns ``(*groups, *fields)``; the
+    global form groups by a constant key."""
+    key = groups or ["__kernel_key"]
     src = counts if groups else counts.withColumn(key[0], F.lit(0))
-    schema = StructType(
-        [src.schema[g] for g in key]
-        + [StructField(c, LongType()) for c in cols]
-    )
+    schema = StructType([src.schema[g] for g in key] + list(fields))
+    types = {
+        f.name: "boolean" if isinstance(f.dataType, BooleanType) else "Int64"
+        for f in fields
+    }
 
     def _apply(pdf):
-        got = _trend_kernel(pdf["t"].to_numpy(), pdf["x"].to_numpy())
-        out = pdf[key].iloc[: 1 if got else 0].reset_index(drop=True)
-        for c in cols:
-            out[c] = [got[c]] if got else []
+        cols = fn(pdf["t"].to_numpy(), pdf["x"].to_numpy())
+        rows = len(cols[fields[0].name])
+        out = pdf[key].iloc[[0] * rows].reset_index(drop=True)
+        for c, dtype in types.items():
+            out[c] = pd.array(cols[c], dtype=dtype)
         return out
 
     out = src.select(*key, "t", "x").groupBy(*key).applyInPandas(
         _apply, schema=schema
     )
     return out if groups else out.drop(key[0])
+
+
+def _longs(*names: str, nullable: bool = True) -> list:
+    return [StructField(c, LongType(), nullable) for c in names]
+
+
+def _one_row(stats: dict | None, names: Sequence[str]) -> dict:
+    """A kernel's scalar statistics as one output row (no row for
+    ``None``)."""
+    return {c: [stats[c]] if stats else [] for c in names}
+
+
+def _cusum_out(
+    out: DataFrame, groups: list, bus: int, *rest: str
+) -> DataFrame:
+    """The kernel's change-point bucket indices as bucket-start
+    timestamps, in :func:`cusum_changepoint`'s column order, then
+    ``rest``."""
+    return out.select(
+        *groups, "n", "buckets",
+        F.timestamp_micros(F.col("up_t") * bus).alias("up_cp_ts"),
+        "up_ppm",
+        F.timestamp_micros(F.col("down_t") * bus).alias("down_cp_ts"),
+        "down_ppm",
+        *rest,
+    )
+
+
+def _trend_pass(counts: DataFrame, groups: list, names: Sequence[str]):
+    """``(*groups, *names)`` from :func:`_trend_kernel`, one kernel pass;
+    groups with fewer than two buckets emit no row."""
+    return _kernel_pass(
+        counts, groups, _longs(*names),
+        lambda t, x: _one_row(_trend_kernel(t, x), names),
+    )
+
+
+_CUSUM_FIELDS = ("n", "buckets", "up_t", "up_ppm", "down_t", "down_ppm")
+_REPORT_TREND = ("slope_num", "slope_den", "s_stat", "var18")
 
 
 def cusum_changepoint(
@@ -356,141 +507,38 @@ def cusum_changepoint(
     ``D <= n*B``, so ``up_ppm = D*1e6 div (n*B)`` via two-step
     division; 0 = perfectly steady rate, ->1e6 = all mass on one side
     of the cp.  Groups with a single bucket report 0/0 deviations
-    (S == 0 everywhere; cp = that bucket)."""
-    if bucket not in _BUCKET_US:
-        raise ValueError(
-            f"cusum_changepoint: bucket must be one of {sorted(_BUCKET_US)},"
-            f" got {bucket!r}"
-        )
-    bus = _BUCKET_US[bucket]
+    (S == 0 everywhere; cp = that bucket).
+
+    Scale shape: the only full-data shuffle is the (group, bucket)
+    count — ``counts_df`` when given, else built here (the weighted
+    form sums the weights instead of counting rows).  Each group's
+    contraction rows then go to ONE ``applyInPandas`` call of the exact
+    numpy kernel ``_cusum_kernel``: cumulative sums and running
+    extremes over the nonempty buckets, no window and no join.  The
+    int64 guard (``n * buckets * 1000 < 2^63``) runs in the kernel over
+    the exact totals before any product is formed."""
+    bus = _bucket_us(bucket, "cusum_changepoint")
     groups = list(group_cols or [])
-
-    if counts_df is not None:
-        if weight_expr is not None:
-            raise ValueError(
-                "cusum_changepoint: counts_df carries plain row counts"
-                " and cannot be combined with weight_expr"
-            )
-        # bucket_counts keys by t = unix_micros DIV bus; both DIV and %
-        # truncate toward zero, so t * bus == unix_micros - unix_micros
-        # % bus exactly — the same bucket starts as the inline build.
-        counts = _counts_or(
+    if counts_df is not None and weight_expr is not None:
+        raise ValueError(
+            "cusum_changepoint: counts_df carries plain row counts"
+            " and cannot be combined with weight_expr"
+        )
+    # bucket_counts keys by t = unix_micros DIV bus, truncating toward
+    # zero: t * bus is the unix_micros - unix_micros % bus bucket start
+    counts = (
+        _bucket_counts(df, ts_col, groups, bus, weight_expr)
+        if weight_expr is not None
+        else _counts_or(
             df, counts_df, ts_col, groups, bus, "cusum_changepoint"
-        ).select(
-            *groups, (F.col("t") * F.lit(bus)).alias("bus"), "x"
-        )
-    else:
-        base = df.filter(F.col(ts_col).isNotNull())
-        if weight_expr is not None:
-            base = base.filter(
-                F.expr(f"({weight_expr}) IS NOT NULL AND ({weight_expr}) >= 0")
-            )
-        counts = (
-            base.select(
-                *[base[g] for g in groups],
-                (F.unix_micros(F.col(ts_col))
-                 - F.unix_micros(F.col(ts_col)) % bus)
-                .alias("bus"),
-                *([F.expr(weight_expr).alias("__w")] if weight_expr else []),
-            )
-            .groupBy(*groups, "bus")
-            .agg(
-                (F.sum(F.expr("CAST(__w AS BIGINT)")) if weight_expr
-                 else F.count(F.lit(1))).cast("bigint").alias("x")
-            )
-        )
-
-    wg = Window.partitionBy(*groups) if groups else Window.partitionBy()
-    w_ord = wg.orderBy("bus")
-    w_pre = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_all = wg.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-
-    # per-bucket contraction with group totals and bucket indices
-    c = (
-        counts.withColumn("p", F.sum("x").over(
-            w_ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("total", F.sum("x").over(w_all))
-        .withColumn("min_bus", F.min("bus").over(w_all))
-        .withColumn("t", F.expr(f"(bus - min_bus) DIV {bus} + 1"))
-        .withColumn("b", F.max(F.expr(f"(bus - min_bus) DIV {bus} + 1"))
-                    .over(w_all))
-    )
-    c = (
-        c.withColumn("s", F.expr("p * b - t * total"))
-        .withColumn("pre", F.expr("(p - x) * b - (t - 1) * total"))
-        .withColumn("is_last", F.col("t") == F.col("b"))
-    )
-    # running extremes over the contraction (pre_1 = 0 covers S_0)
-    c = (
-        c.withColumn(
-            "runmin_pre",
-            F.min("pre").over(w_ord.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .withColumn(
-            # S_0 = 0 is always in the prefix: maxima of S live at
-            # post-values (S jumps up only where mass lands), so the
-            # running max is greatest(0, max of previous posts).
-            "runmax_s_prev",
-            F.greatest(
-                F.lit(0).cast("bigint"),
-                F.coalesce(F.max("s").over(w_pre), F.lit(0).cast("bigint")),
-            ),
-        )
-        .withColumn("up_d", F.expr("s - runmin_pre"))
-        .withColumn(
-            "down_d",
-            F.expr(
-                "CASE WHEN is_last THEN"
-                " greatest(runmax_s_prev - pre,"
-                "          greatest(runmax_s_prev, s) - s)"
-                " ELSE runmax_s_prev - pre END"
-            ),
         )
     )
-
-    # argmax with earliest-bucket tiebreak, both directions, one pass
-    w_up = w_ord.orderBy(F.desc("up_d"), F.asc("bus"))
-    w_dn = w_ord.orderBy(F.desc("down_d"), F.asc("bus"))
-    ranked = c.withColumn("r_up", F.row_number().over(w_up)).withColumn(
-        "r_dn", F.row_number().over(w_dn)
+    i64_max = _I64_MAX
+    out = _kernel_pass(
+        counts, groups, _longs(*_CUSUM_FIELDS),
+        lambda t, x: _one_row(_cusum_kernel(t, x, i64_max), _CUSUM_FIELDS),
     )
-    agg = ranked.groupBy(*groups).agg(
-        F.max("total").alias("n"),
-        F.max("b").alias("buckets"),
-        F.max(F.when(F.col("r_up") == 1, F.col("bus"))).alias("up_bus"),
-        F.max(F.when(F.col("r_up") == 1, F.col("up_d"))).alias("up_d"),
-        F.max(F.when(F.col("r_dn") == 1, F.col("bus"))).alias("down_bus"),
-        F.max(F.when(F.col("r_dn") == 1, F.col("down_d"))).alias("down_d"),
-    )
-    # division-form guard (cannot itself overflow) over the EXACT
-    # totals: n and buckets are plain counts/indices even when the
-    # window algebra upstream has wrapped, so the raise always fires
-    # before a wrapped ppm escapes
-    guard = (
-        f"n > {_I64_MAX} DIV 1000 DIV buckets"
-    )
-    raise_bigint = (
-        "CAST(raise_error('cusum_changepoint: a group exceeds the"
-        " n * buckets * 1000 < 2^63 exactness bound; shard the input"
-        " (e.g. by time range) or coarsen the bucket') AS BIGINT)"
-    )
-    return agg.select(
-        *groups,
-        F.col("n"),
-        F.col("buckets"),
-        F.timestamp_micros(F.col("up_bus")).alias("up_cp_ts"),
-        F.expr(
-            f"CASE WHEN {guard} THEN {raise_bigint}"
-            f" ELSE {_ppm2('up_d', '(n * buckets)')} END"
-        ).cast("bigint").alias("up_ppm"),
-        F.timestamp_micros(F.col("down_bus")).alias("down_cp_ts"),
-        F.expr(
-            f"CASE WHEN {guard} THEN {raise_bigint}"
-            f" ELSE {_ppm2('down_d', '(n * buckets)')} END"
-        ).cast("bigint").alias("down_ppm"),
-    )
+    return _cusum_out(out, groups, bus)
 
 
 def tvd_drift(
@@ -799,12 +847,7 @@ def theilsen_trend(
     the cap (a 4000-bucket span is ~8M pairs per group — pre-aggregate
     to a coarser bucket instead).  Groups with a single bucket have no
     pairs and emit no row."""
-    if bucket not in _BUCKET_US:
-        raise ValueError(
-            f"theilsen_trend: bucket must be one of {sorted(_BUCKET_US)},"
-            f" got {bucket!r}"
-        )
-    bus = _BUCKET_US[bucket]
+    bus = _bucket_us(bucket, "theilsen_trend")
     groups = list(group_cols or [])
 
     counts = _counts_or(df, counts_df, ts_col, groups, bus, "theilsen_trend")
@@ -812,9 +855,8 @@ def theilsen_trend(
         counts, groups, max_buckets, "theilsen_trend", bucket,
         "pre-aggregate to a coarser bucket or raise the cap",
     )
-    return _trend_stats(
-        counts, groups,
-        ("slope_num", "slope_den", "n", "n_buckets", "n_pairs"),
+    return _trend_pass(
+        counts, groups, ("slope_num", "slope_den", "n", "n_buckets", "n_pairs")
     )
 
 
@@ -849,14 +891,9 @@ def leadlag_spearman(
     ``max_buckets`` guards the densified span (RAISES, same contract
     as theilsen_trend).  Lags with a constant series (e.g. the
     overlap shrank to nothing) drop, per spearman's contract."""
-    if bucket not in _BUCKET_US:
-        raise ValueError(
-            f"leadlag_spearman: bucket must be one of {sorted(_BUCKET_US)},"
-            f" got {bucket!r}"
-        )
+    bus = _bucket_us(bucket, "leadlag_spearman")
     if max_lag < 0:
         raise ValueError("leadlag_spearman: max_lag must be >= 0")
-    bus = _BUCKET_US[bucket]
     from kafka_dead_letter_analyzer_spark.operators.ranking import (
         spearman_exact,
     )
@@ -958,70 +995,57 @@ def hampel_outliers(
     the window's sigma enough to mask itself — the median and MAD are
     immune, breakdown 50%).
 
-    Exactness: the window's counts collect into an array, sort, and
-    index — medians are actual elements (lower median), MAD likewise
-    over |x - med|, and the flag compares ``k_den * |cnt - med| >
-    k_num * mad`` in integers (k as an exact rational; the default
-    3/1).  MAD = 0 (constant window) flags any deviating count, the
-    strict-inequality convention.  Timeline densifies with zeros via
-    sequence() (a silent day IS data to the median).  Scale shape: one
-    (group, bucket) count shuffle, then array ops over the DENSIFIED
-    contraction — window arrays are 2*half_window+1 longs; edges use
-    the available neighbors (shorter windows, same rule both engines).
+    Exactness: medians are actual elements of the sorted window (lower
+    median), MAD likewise over |x - med|, and the flag compares
+    ``k_den * |cnt - med| > k_num * mad`` in integers (k as an exact
+    rational; the default 3/1).  MAD = 0 (constant window) flags any
+    deviating count, the strict-inequality convention.  The timeline
+    densifies with zeros (a silent day IS data to the median); edges
+    use the available neighbors (shorter windows).
+
+    Scale shape: one (group, bucket) count shuffle, then ONE
+    ``applyInPandas`` call per group of the exact numpy kernel
+    ``_hampel_kernel``, which densifies the group's span in worker
+    memory and sorts its ``2*half_window+1``-long windows as one
+    strided view — no timeline join and no window.  ``max_buckets``
+    probes the span and RAISES past the cap.
     """
-    if bucket not in _BUCKET_US:
-        raise ValueError(
-            f"hampel_outliers: bucket must be one of {sorted(_BUCKET_US)},"
-            f" got {bucket!r}"
-        )
+    bus = _bucket_us(bucket, "hampel_outliers")
     if half_window < 1:
         raise ValueError("hampel_outliers: half_window must be >= 1")
     if k_num < 0 or k_den < 1:
         raise ValueError("hampel_outliers: need k_num >= 0, k_den >= 1")
-    bus = _BUCKET_US[bucket]
     groups = list(group_cols or [])
 
     counts = _counts_or(df, counts_df, ts_col, groups, bus, "hampel_outliers")
     # densify guard: hampel's window work is LINEAR in the span (unlike
     # the quadratic pair operators, so the default cap is generous),
     # but an adversarial span — one stray 1970 timestamp at ms buckets —
-    # must raise, not materialize a gigarow sequence()
-    span = _span_guard(
+    # must raise, not densify a gigarow timeline in one worker
+    _span_guard(
         counts, groups, max_buckets, "hampel_outliers", bucket,
         "coarsen the bucket or filter the stray timestamps",
     )
-    timeline = span.select(
-        *groups, F.explode(F.sequence("t_lo", "t_hi")).alias("t")
+    hw, kn, kd = int(half_window), int(k_num), int(k_den)
+
+    def buckets(t, x):
+        lo, dense = _densify(t, x)
+        med, mad, flagged = _hampel_kernel(dense, hw, kn, kd)
+        return {
+            "t": lo + np.arange(len(dense)), "cnt": dense, "med": med,
+            "mad": mad, "flagged": flagged,
+        }
+
+    out = _kernel_pass(
+        counts, groups,
+        [*_longs("t", "cnt", "med", "mad", nullable=False),
+         StructField("flagged", BooleanType(), False)],
+        buckets,
     )
-    # null-safe on the group key (round 9): keeps the NULL group
-    dense = null_safe_group_join(
-        timeline, counts, groups, plain_keys=["t"], how="left"
-    ).select(
-        *groups, "t",
-        F.coalesce("x", F.lit(0).cast("bigint")).alias("x"),
-    )
-    wg = (
-        Window.partitionBy(*groups) if groups else Window.partitionBy()
-    ).orderBy("t").rowsBetween(-half_window, half_window)
-    arr = dense.withColumn("win", F.array_sort(F.collect_list("x").over(wg)))
-    scored = arr.withColumn(
-        "med", F.expr("win[(size(win) + 1) DIV 2 - 1]")
-    ).withColumn(
-        "mad",
-        F.expr(
-            "array_sort(transform(win, v -> abs(v - med)))"
-            "[(size(win) + 1) DIV 2 - 1]"
-        ),
-    )
-    return scored.select(
+    return out.select(
         *groups,
-        F.timestamp_micros(F.expr(f"t * {bus}")).alias("bucket_ts"),
-        F.col("x").alias("cnt"),
-        "med",
-        "mad",
-        F.expr(f"{int(k_den)} * abs(x - med) > {int(k_num)} * mad").alias(
-            "flagged"
-        ),
+        F.timestamp_micros(F.col("t") * bus).alias("bucket_ts"),
+        "cnt", "med", "mad", "flagged",
     )
 
 
@@ -1053,12 +1077,7 @@ def mann_kendall(
     pair row reaches Spark.  ``max_buckets`` probes the span and RAISES
     (pre-aggregate to a coarser bucket).  Groups with a single bucket
     emit no row."""
-    if bucket not in _BUCKET_US:
-        raise ValueError(
-            f"mann_kendall: bucket must be one of {sorted(_BUCKET_US)},"
-            f" got {bucket!r}"
-        )
-    bus = _BUCKET_US[bucket]
+    bus = _bucket_us(bucket, "mann_kendall")
     groups = list(group_cols or [])
 
     counts = _counts_or(df, counts_df, ts_col, groups, bus, "mann_kendall")
@@ -1066,7 +1085,7 @@ def mann_kendall(
         counts, groups, max_buckets, "mann_kendall", bucket,
         "pre-aggregate to a coarser bucket or raise the cap",
     )
-    return _trend_stats(counts, groups, ("s_stat", "var18", "n_buckets", "n"))
+    return _trend_pass(counts, groups, ("s_stat", "var18", "n_buckets", "n"))
 
 
 def dead_letter_drift_report(
@@ -1078,7 +1097,7 @@ def dead_letter_drift_report(
 ) -> DataFrame:
     """The product-level drift dashboard over a dead-letter feed — one
     row per group with a non-NULL timestamp (every group CUSUM
-    reports), joining four detectors this module ships: CUSUM's
+    reports), holding the four detectors this module ships: CUSUM's
     strongest up/down level shift (+ its ppm decisiveness), the
     Theil-Sen robust trend rational, the Mann-Kendall test statistics,
     and the count of Hampel-flagged poisoned buckets.
@@ -1098,51 +1117,46 @@ def dead_letter_drift_report(
     :func:`bucket_counts` with the same ``ts_col``/``group_cols``/
     ``bucket``; the caller owns its persistence), else built here,
     persisted and registered with ``cache_registry`` for the session
-    owner's ``release_all``.  CUSUM and Hampel take it as their
-    ``counts_df``, one span probe guards the pair statistics'
-    ``max_buckets=4000`` cap (:func:`theilsen_trend`'s), and one kernel
-    pass (``_trend_kernel``) yields the Theil-Sen and Mann-Kendall
-    columns together.  The joins key on the error-key domain (broadcast-sized
-    by construction) and are NULL-safe."""
+    owner's ``release_all``.  One span probe guards the pair
+    statistics' ``max_buckets=4000`` cap (:func:`theilsen_trend`'s),
+    then ONE ``applyInPandas`` pass runs every detector's kernel on
+    each group's rows (``_cusum_kernel``, ``_hampel_kernel`` with the
+    default ±3-bucket window and k = 3, ``_trend_kernel``) and emits
+    the group's whole report row: no window, no join, no densified
+    timeline in Spark.  A NULL group key is a real group and keeps its
+    row."""
     groups = list(group_cols)
+    bus = _bucket_us(bucket, "dead_letter_drift_report")
     if counts_df is None:
-        counts_df = cache_registry.track(
-            bucket_counts(df, ts_col, groups, bucket).persist()
+        counts = cache_registry.track(
+            _bucket_counts(df, ts_col, groups, bus).persist()
         )
-    cp = cusum_changepoint(
-        df, ts_col=ts_col, group_cols=groups, bucket=bucket,
-        counts_df=counts_df,
-    )
-    hp = (
-        hampel_outliers(
-            df, ts_col=ts_col, group_cols=groups, bucket=bucket,
-            counts_df=counts_df,
+    else:
+        counts = _counts_or(
+            df, counts_df, ts_col, groups, bus, "dead_letter_drift_report"
         )
-        .groupBy(*groups)
-        .agg(
-            F.sum(F.when(F.col("flagged"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("flagged_buckets")
-        )
-    )
     _span_guard(
-        counts_df, groups, 4000, "dead_letter_drift_report", bucket,
+        counts, groups, 4000, "dead_letter_drift_report", bucket,
         "pre-aggregate to a coarser bucket or raise the cap",
     )
-    trend = _trend_stats(
-        counts_df, groups, ("slope_num", "slope_den", "s_stat", "var18")
-    )
+    i64_max = _I64_MAX
 
-    def join(left, right, how):
-        if groups:
-            return null_safe_group_join(left, right, groups, how=how)
-        return left.join(right, F.lit(True), how)
+    def report_row(t, x):
+        cusum = _cusum_kernel(t, x, i64_max)
+        trend = _trend_kernel(t, x) or dict.fromkeys(_REPORT_TREND)
+        _, _, flagged = _hampel_kernel(_densify(t, x)[1], 3, 3, 1)
+        return {
+            **_one_row(cusum, _CUSUM_FIELDS),
+            **_one_row(trend, _REPORT_TREND),
+            "flagged_buckets": [int(flagged.sum())],
+        }
 
-    return join(join(cp, hp, "inner"), trend, "left").select(
-        *groups, "n", "buckets", "up_cp_ts", "up_ppm", "down_cp_ts",
-        "down_ppm", "slope_num", "slope_den", "s_stat", "var18",
-        "flagged_buckets",
+    out = _kernel_pass(
+        counts, groups,
+        _longs(*_CUSUM_FIELDS, *_REPORT_TREND, "flagged_buckets"),
+        report_row,
     )
+    return _cusum_out(out, groups, bus, *_REPORT_TREND, "flagged_buckets")
 
 
 def _pick_report_bucket(

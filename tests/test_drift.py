@@ -1738,3 +1738,88 @@ def test_counts_df_validation_raises(spark):
             df, ts_col="ts", group_cols=["grp"], bucket="hour",
             counts_df=good, weight_expr="1",
         )
+
+
+# ---------------------------------------------------------------------------
+# _cusum_kernel / _hampel_kernel: the per-group numpy CUSUM and Hampel
+# kernels, against the O(B) full-timeline references above (no JVM)
+
+
+def _kernel_cusum(sparse):
+    import numpy as np
+
+    from kafka_dead_letter_analyzer_spark.operators import drift as DR
+
+    ts = sorted(sparse, reverse=True)  # the kernel takes rows in any order
+    got = DR._cusum_kernel(
+        np.array(ts, dtype=np.int64),
+        np.array([sparse[t] for t in ts], dtype=np.int64),
+        DR._I64_MAX,
+    )
+    return {
+        "n": got["n"],
+        "buckets": got["buckets"],
+        "up_ppm": got["up_ppm"],
+        "up_bucket": got["up_t"],
+        "down_ppm": got["down_ppm"],
+        "down_bucket": got["down_t"],
+    }
+
+
+def _kernel_hampel(sparse, hw, k):
+    import numpy as np
+
+    from kafka_dead_letter_analyzer_spark.operators import drift as DR
+
+    ts = list(sparse)
+    lo, dense = DR._densify(
+        np.array(ts, dtype=np.int64),
+        np.array([sparse[t] for t in ts], dtype=np.int64),
+    )
+    med, mad, flagged = DR._hampel_kernel(dense, hw, k, 1)
+    return {
+        lo + i: (int(dense[i]), int(med[i]), int(mad[i]), bool(flagged[i]))
+        for i in range(len(dense))
+    }
+
+
+def test_cusum_and_hampel_kernels_match_brute_force_property():
+    """Property: for ANY sparse timeline — short and dense, or long
+    with all-zero stretches, before or after the 1970 epoch — the CUSUM
+    kernel equals the full-timeline walk ``_brute_cusum`` (earliest
+    bucket on ties) and the Hampel kernel equals ``_brute_hampel`` on
+    every bucket of the densified span (shorter edge windows)."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    def timelines(lo, hi, max_size):
+        return st.dictionaries(
+            st.integers(min_value=lo, max_value=hi),  # bucket index
+            st.integers(min_value=1, max_value=4),    # events in it
+            min_size=1,
+            max_size=max_size,
+        )
+
+    @settings(max_examples=300, deadline=None)
+    @given(
+        st.one_of(timelines(0, 8, 9), timelines(-60, 60, 25)),
+        st.integers(min_value=1, max_value=4),  # half_window
+        st.integers(min_value=0, max_value=3),  # k
+    )
+    @example({5: 3}, 3, 3)  # single bucket: 0/0 deviations, one window
+    @example({0: 3, 1: 3, 7: 1}, 3, 3)  # last bucket under the mean
+    @example({0: 1, 1: 1, 2: 1, 3: 1}, 1, 3)  # every deviation ties at 0
+    @example({0: 1, 1: 1, 2: 4, 3: 4}, 1, 3)  # clean step: up == down
+    @example({-30: 2, -29: 1, -27: 4, -3: 4}, 2, 0)  # negative t
+    def check(sparse, hw, k):
+        hours = [t for t, c in sparse.items() for _ in range(c)]
+        assert _kernel_cusum(sparse) == _brute_cusum(hours), sparse
+        lo = min(sparse)
+        dense = [sparse.get(t, 0) for t in range(lo, max(sparse) + 1)]
+        want = {
+            lo + i: (x, med, mad, bool(fl))
+            for i, (x, med, mad, fl) in _brute_hampel(dense, hw, k).items()
+        }
+        assert _kernel_hampel(sparse, hw, k) == want, (sparse, hw, k)
+
+    check()

@@ -1910,3 +1910,40 @@ def test_cli_drift_report_runs_one_kernel_no_pair_table(spark, tmp_path):
     ]
     [plan] = [p for p in plans if f"{out}/drift" in p]
     _assert_one_trend_kernel(_executed_tree(plan))
+
+
+def test_cli_drift_report_one_kernel_no_window_no_join(spark, tmp_path):
+    """All four detectors of ``run_batch``'s drift report run in ONE
+    kernel pass over the shared contraction: the drift write's executed
+    plan has one ``FlatMapGroupsInPandas`` and no window, no join and no
+    densified ``explode(sequence(...))`` timeline."""
+    from kafka_dead_letter_analyzer_spark.cli import AnalyzerConfig, run_batch
+
+    rows = [
+        FX.envelope(topic=topic, offset=i,
+                    timestamp=_TS + dt.timedelta(hours=i // 2),
+                    value_deadletter=FX.dead_letter_value())
+        for topic in ("a-dead-letters", "b-dead-letters")
+        for i in range(8)
+    ]
+    src = str(tmp_path / "raw")
+    FX.raw_frame(spark, rows).write.parquet(src)
+    out = str(tmp_path / "out")
+    cfg = AnalyzerConfig(batch_input=src, batch_output=out, drift_report=True)
+    run_batch(spark, cfg)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    [plan] = [
+        p
+        for p in (
+            executions.apply(i).physicalPlanDescription()
+            for i in range(executions.size())
+        )
+        if f"{out}/drift" in p
+    ]
+    tree = _executed_tree(plan)
+    assert _count(tree, "FlatMapGroupsInPandas") == 1, tree
+    assert "Window" not in tree, tree
+    assert "Join" not in tree, tree
+    assert "explode(sequence(" not in tree, tree
