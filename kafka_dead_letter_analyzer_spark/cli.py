@@ -114,11 +114,27 @@ def parse_args(argv: list[str] | None = None) -> AnalyzerConfig:
 
 
 def run_batch(spark, config: AnalyzerConfig) -> dict[str, str]:
-    """Batch mode: RAW_ENVELOPE parquet in -> four parquet outputs.
+    """Batch mode: RAW_ENVELOPE parquet in -> four parquet outputs, plus
+    the drift report with ``config.drift_report``.
 
-    Output layout: ``<batch_output>/{full,stats,examples,errors}``.
-    Returns the written paths.
+    Output layout: ``<batch_output>/{full,stats,examples,errors,drift}``.
+    ``build_topology`` wires the outputs once; each sink's write then runs
+    as its own Spark job from one driver thread per sink, so the writes
+    overlap instead of queueing behind each other's fixed latency. Every
+    thread inherits the caller's local properties (job group included)
+    and session tags, and names its jobs ``run_batch: <sink>``. The drift
+    report reads the in-memory ``full_dead_letters`` frame, not the
+    written ``full`` parquet, so it does not wait for that write.
+
+    Waits for every write, then re-raises the first failure in the order
+    full, stats, examples, errors, drift. Returns the written paths in
+    that order.
     """
+    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
+
+    from pyspark import inheritable_thread_target
+
     from kafka_dead_letter_analyzer_spark.plans.topology import build_topology
     from kafka_dead_letter_analyzer_spark.schemas import RAW_ENVELOPE
     from kafka_dead_letter_analyzer_spark.sources.batch import _ensure_engine_confs
@@ -126,55 +142,70 @@ def run_batch(spark, config: AnalyzerConfig) -> dict[str, str]:
     _ensure_engine_confs(spark)
     raw = spark.read.schema(RAW_ENVELOPE).parquet(config.batch_input)
     out = build_topology(raw)
-    paths = {}
-    for name, df in (
-        ("full", out.full_dead_letters),
-        ("stats", out.error_statistics),
-        ("examples", out.error_examples),
-        ("errors", out.error_topic),
-    ):
-        path = f"{config.batch_output}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        paths[name] = path
+    writes = {
+        name: df.write.mode("overwrite").parquet
+        for name, df in (
+            ("full", out.full_dead_letters),
+            ("stats", out.error_statistics),
+            ("examples", out.error_examples),
+            ("errors", out.error_topic),
+        )
+    }
     if config.drift_report:
-        from pyspark.sql import functions as F
+        writes["drift"] = partial(_write_drift_report, out.full_dead_letters)
+    paths = {name: f"{config.batch_output}/{name}" for name in writes}
 
-        from kafka_dead_letter_analyzer_spark.functions.formatting import (
-            TS_PATTERN,
-        )
-        from kafka_dead_letter_analyzer_spark.operators.drift import (
-            _pick_report_bucket,
-            bucket_counts,
-            dead_letter_drift_report,
-        )
+    def job(name: str) -> None:
+        spark.sparkContext.setJobDescription(f"run_batch: {name}")
+        writes[name](paths[name])
 
-        # the full sink carries the reference's FORMATTED timestamp —
-        # parse it back once for the detectors
-        feed = spark.read.parquet(paths["full"]).withColumn(
-            "event_ts", F.to_timestamp("timestamp", TS_PATTERN)
-        )
-        # hour buckets when the feed's span fits the pair operators'
-        # cap, day otherwise (a long-retention feed must not raise)
-        bucket = _pick_report_bucket(feed, "event_ts")
-        groups = ["topic", "type"]
-        # the report's one (group, bucket) contraction: its span probe
-        # and its single kernel pass over all four detectors both read
-        # it; released once the report is written so a long session
-        # keeps no cached frame per job
-        counts = bucket_counts(
-            feed, ts_col="event_ts", group_cols=groups, bucket=bucket
-        ).persist()
-        try:
-            report = dead_letter_drift_report(
-                feed, ts_col="event_ts", group_cols=groups, bucket=bucket,
-                counts_df=counts,
-            )
-            path = f"{config.batch_output}/drift"
-            report.write.mode("overwrite").parquet(path)
-        finally:
-            counts.unpersist()
-        paths["drift"] = path
+    def inheriting(fn):
+        # one wrapper per job: each clones the caller's local properties,
+        # and threads sharing one clone would share one SQL execution id.
+        # Outside PySpark's pinned-thread mode there is nothing to inherit
+        # and the factory hands the session back instead of a wrapper.
+        wrap = inheritable_thread_target(spark)
+        return fn if wrap is spark else wrap(fn)
+
+    with ThreadPoolExecutor(len(writes)) as pool:
+        jobs = [pool.submit(inheriting(job), name) for name in writes]
+    for j in jobs:
+        j.result()
     return paths
+
+
+def _write_drift_report(full, path: str) -> None:
+    """The per-(topic, type) drift report over the normalized feed."""
+    from pyspark.sql import functions as F
+
+    from kafka_dead_letter_analyzer_spark.functions.formatting import TS_PATTERN
+    from kafka_dead_letter_analyzer_spark.operators.drift import (
+        _pick_report_bucket,
+        bucket_counts,
+        dead_letter_drift_report,
+    )
+
+    # the full sink carries the reference's FORMATTED timestamp — parse
+    # it back once for the detectors
+    feed = full.withColumn("event_ts", F.to_timestamp("timestamp", TS_PATTERN))
+    # hour buckets when the feed's span fits the pair operators' cap,
+    # day otherwise (a long-retention feed must not raise)
+    bucket = _pick_report_bucket(feed, "event_ts")
+    groups = ["topic", "type"]
+    # the report's one (group, bucket) contraction: its span probe and
+    # its single kernel pass over all four detectors both read it;
+    # released once the report is written so a long session keeps no
+    # cached frame per job
+    counts = bucket_counts(
+        feed, ts_col="event_ts", group_cols=groups, bucket=bucket
+    ).persist()
+    try:
+        dead_letter_drift_report(
+            feed, ts_col="event_ts", group_cols=groups, bucket=bucket,
+            counts_df=counts,
+        ).write.mode("overwrite").parquet(path)
+    finally:
+        counts.unpersist()
 
 
 def run_streaming(spark, config: AnalyzerConfig) -> list:

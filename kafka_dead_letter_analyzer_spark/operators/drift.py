@@ -100,8 +100,11 @@ def _bucket_us(bucket: str, who: str) -> int:
     return _BUCKET_US[bucket]
 
 
-def _ppm(num: int, nt: int) -> int:
-    """Python-int twin of :func:`_ppm2`: ``floor(num * 1e6 / nt)``."""
+def _ppm(num: int, nt: int) -> int | None:
+    """Python-int twin of :func:`_ppm2`: ``floor(num * 1e6 / nt)``;
+    ``None`` (NULL, as SQL's integer division by 0) when ``nt`` is 0."""
+    if nt == 0:
+        return None
     d1, r = divmod(num * 1000, nt)
     return d1 * 1000 + r * 1000 // nt
 
@@ -275,8 +278,9 @@ def _cusum_kernel(t: np.ndarray, x: np.ndarray, i64_max: int) -> dict:
     ``up_ppm``/``down_ppm`` — the algebra of :func:`cusum_changepoint`'s
     docstring over the nonempty buckets only, exact in int64.
     ``np.argmax`` over rows sorted by ``t`` takes the EARLIEST bucket on
-    ties.  Raises, naming the remedy, when ``n * buckets * 1000`` would
-    exceed ``i64_max`` — before any product is formed."""
+    ties.  A zero-mass group (weights all 0) has ``n * buckets = 0``
+    and NULL ppms.  Raises, naming the remedy, when ``n * buckets *
+    1000`` would exceed ``i64_max`` — before any product is formed."""
     order = np.argsort(t)
     t = np.asarray(t, dtype=np.int64)[order]
     x = np.asarray(x, dtype=np.int64)[order]
@@ -507,7 +511,9 @@ def cusum_changepoint(
     ``D <= n*B``, so ``up_ppm = D*1e6 div (n*B)`` via two-step
     division; 0 = perfectly steady rate, ->1e6 = all mass on one side
     of the cp.  Groups with a single bucket report 0/0 deviations
-    (S == 0 everywhere; cp = that bucket).
+    (S == 0 everywhere; cp = that bucket).  A weighted group whose
+    weights are all 0 has ``n*B = 0``: its ppms are NULL, as SQL's
+    integer division by 0, and the other groups keep their rows.
 
     Scale shape: the only full-data shuffle is the (group, bucket)
     count — ``counts_df`` when given, else built here (the weighted
@@ -1162,20 +1168,25 @@ def dead_letter_drift_report(
 def _pick_report_bucket(
     df: DataFrame, ts_col: str, max_buckets: int = 4000
 ) -> str:
-    """Coarsest-fitting bucket for the drift report: hour when the
-    feed's span fits the pair operators' cap, else day (raises only
-    past ~11 years of days — filter stray timestamps instead)."""
+    """Finest-fitting bucket for the drift report: hour when the feed's
+    span covers at most ``max_buckets`` hour buckets of
+    :func:`bucket_counts` (``hi DIV b - lo DIV b + 1``, truncating like
+    its key), else day (raises only past ~11 years of days — filter
+    stray timestamps instead)."""
     lo_hi = df.filter(F.col(ts_col).isNotNull()).agg(
         F.min(F.unix_micros(F.col(ts_col))).alias("lo"),
         F.max(F.unix_micros(F.col(ts_col))).alias("hi"),
     ).collect()[0]
     if lo_hi["lo"] is None:
         return "hour"
-    span_us = lo_hi["hi"] - lo_hi["lo"]
-    if span_us // _BUCKET_US["hour"] + 1 <= max_buckets:
-        return "hour"
-    if span_us // _BUCKET_US["day"] + 1 <= max_buckets:
-        return "day"
+
+    def div(us: int, bus: int) -> int:  # SQL DIV: truncates toward zero
+        return us // bus if us >= 0 else -(-us // bus)
+
+    for bucket in ("hour", "day"):
+        bus = _BUCKET_US[bucket]
+        if div(lo_hi["hi"], bus) - div(lo_hi["lo"], bus) + 1 <= max_buckets:
+            return bucket
     raise ValueError(
         "dead_letter_drift_report: feed spans more than"
         f" {max_buckets} days; filter stray timestamps"

@@ -4,6 +4,7 @@ batch-mode end-to-end run."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from kafka_dead_letter_analyzer_spark.cli import AnalyzerConfig, parse_args, run_batch
 from kafka_dead_letter_analyzer_spark.sources import fixtures as FX
@@ -110,3 +111,115 @@ def test_batch_mode_drift_report(spark, tmp_path):
         batch_input=src, batch_output=str(tmp_path / "out_plain")
     )
     assert "drift" not in run_batch(spark, cfg2)
+
+
+def test_batch_drift_report_picks_day_when_hour_buckets_overflow(spark, tmp_path):
+    # 00:30 to 3999.6 h later: a 3999.6 h span, but 4001 hour buckets of
+    # the report's contraction (hours 0 and 4000), one past its cap
+    first = dt.datetime(2024, 1, 1, 0, 30, tzinfo=dt.timezone.utc)
+    rows = [
+        FX.envelope(offset=i, timestamp=first + dt.timedelta(hours=h),
+                    value_deadletter=FX.dead_letter_value())
+        for i, h in enumerate((0, 3999.6))
+    ]
+    src = str(tmp_path / "raw")
+    FX.raw_frame(spark, rows).write.parquet(src)
+    cfg = AnalyzerConfig(batch_input=src, batch_output=str(tmp_path / "out"),
+                         drift_report=True)
+    [r] = spark.read.parquet(run_batch(spark, cfg)["drift"]).collect()
+    # day buckets 0 and 166
+    assert (r["n"], r["buckets"]) == (2, 167)
+    assert r["up_cp_ts"] == dt.datetime(2024, 1, 1)
+
+
+def _small_batch(spark, tmp_path) -> AnalyzerConfig:
+    rows = [
+        FX.envelope(offset=i,
+                    timestamp=dt.datetime(2024, 1, 1, i, tzinfo=dt.timezone.utc),
+                    value_deadletter=FX.dead_letter_value())
+        for i in range(3)
+    ] + [FX.envelope(offset=3, key="bad",
+                     value_deadletter=FX.dead_letter_value(stack_trace=None))]
+    src = str(tmp_path / "raw")
+    FX.raw_frame(spark, rows).write.parquet(src)
+    return AnalyzerConfig(batch_input=src, batch_output=str(tmp_path / "out"),
+                          drift_report=True)
+
+
+def test_run_batch_jobs_fall_in_callers_job_group(spark, tmp_path):
+    """Every job of the concurrent sinks runs in the caller's job group,
+    named by its sink."""
+    cfg = _small_batch(spark, tmp_path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("run-batch-under-test", "run_batch")
+    try:
+        paths = run_batch(spark, cfg)
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert list(paths) == ["full", "stats", "examples", "errors", "drift"]
+    assert tracker.getJobIdsForGroup("run-batch-under-test")
+    assert set(tracker.getJobIdsForGroup()) == ungrouped
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    described = {
+        executions.apply(i).description() for i in range(executions.size())
+    }
+    assert {f"run_batch: {name}" for name in paths} <= described
+
+
+def test_run_batch_failed_sink_raises_after_other_writes(
+    spark, tmp_path, monkeypatch
+):
+    """Two failing sinks: run_batch waits for every write, raises the
+    first failure in sink order, and leaves no thread or cached frame."""
+    import dataclasses
+    import threading
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from kafka_dead_letter_analyzer_spark.plans import topology
+
+    real = topology.build_topology
+
+    def failing(df, sink):
+        return df.withColumn(
+            "kafka_key",
+            F.coalesce(F.raise_error(F.lit(f"{sink} sink failed")).cast("string"),
+                       F.col("kafka_key")),
+        )
+
+    def broken(raw):
+        out = real(raw)
+        return dataclasses.replace(
+            out,
+            error_statistics=failing(out.error_statistics, "stats"),
+            error_topic=failing(out.error_topic, "errors"),
+        )
+
+    monkeypatch.setattr(topology, "build_topology", broken)
+    cfg = _small_batch(spark, tmp_path)
+    threads = threading.active_count()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="stats sink failed"):
+        run_batch(spark, cfg)
+    for name in ("full", "examples", "drift"):
+        assert os.path.exists(f"{cfg.batch_output}/{name}/_SUCCESS"), name
+    assert threading.active_count() == threads
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_run_batch_outside_pinned_thread_mode(spark, tmp_path, monkeypatch):
+    """With ``PYSPARK_PIN_THREAD=false``, PySpark's
+    ``inheritable_thread_target(session)`` returns the session itself;
+    every sink is still written."""
+    import pyspark
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", lambda f=None: f)
+    paths = run_batch(spark, _small_batch(spark, tmp_path))
+    assert len(paths) == 5
+    assert all(os.path.exists(f"{p}/_SUCCESS") for p in paths.values())

@@ -1132,6 +1132,33 @@ def test_weighted_cusum_and_autocorr_degenerations(spark):
     assert out[0]["rho_e6"] == 1_000_000
 
 
+def test_weighted_cusum_zero_mass_group_has_null_ppm(spark):
+    """A group whose weights are all 0 has n * buckets = 0: NULL ppms (as
+    SQL's integer division by 0), while the other group keeps its row."""
+    rows = [("z", _ts(h), 0) for h in (0.5, 2.5, 3.5)] + [
+        ("g", _ts(h), 1) for h in (0.1, 1.1, 2.1, 2.2, 4.5)
+    ]
+    df = spark.createDataFrame(rows, "grp string, ts timestamp, w long")
+    out = {
+        r["grp"]: r.asDict()
+        for r in cusum_changepoint(
+            df, ts_col="ts", group_cols=["grp"], bucket="hour",
+            weight_expr="w",
+        ).collect()
+    }
+    z = out["z"]
+    assert (z["n"], z["buckets"], z["up_ppm"], z["down_ppm"]) == (
+        0, 4, None, None,
+    )
+    # every deviation is 0: the earliest bucket on ties
+    assert z["up_cp_ts"] == z["down_cp_ts"] == _ts(0).replace(tzinfo=None)
+    alone = cusum_changepoint(
+        df.filter("grp = 'g'"), ts_col="ts", group_cols=["grp"],
+        bucket="hour", weight_expr="w",
+    ).collect()[0]
+    assert out["g"] == alone.asDict()
+
+
 def test_hampel_span_guard_and_report_bucket_pick(spark):
     from kafka_dead_letter_analyzer_spark.operators.drift import (
         _pick_report_bucket,

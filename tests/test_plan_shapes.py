@@ -1947,3 +1947,39 @@ def test_cli_drift_report_one_kernel_no_window_no_join(spark, tmp_path):
     assert "Window" not in tree, tree
     assert "Join" not in tree, tree
     assert "explode(sequence(" not in tree, tree
+
+
+def test_cli_drift_report_reads_no_full_output(spark, tmp_path):
+    """``run_batch``'s drift report reads the in-memory full frame: no
+    scan in the drift write's executed plan names ``<out>/full``, and the
+    raw input's scan is there instead."""
+    from kafka_dead_letter_analyzer_spark.cli import AnalyzerConfig, run_batch
+
+    rows = [
+        FX.envelope(offset=i, timestamp=_TS + dt.timedelta(hours=i),
+                    value_deadletter=FX.dead_letter_value())
+        for i in range(4)
+    ]
+    src = str(tmp_path / "raw")
+    FX.raw_frame(spark, rows).write.parquet(src)
+    out = str(tmp_path / "out")
+    cfg = AnalyzerConfig(batch_input=src, batch_output=out, drift_report=True)
+    run_batch(spark, cfg)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    [plan] = [
+        p
+        for p in (
+            executions.apply(i).physicalPlanDescription()
+            for i in range(executions.size())
+        )
+        if f"{out}/drift" in p
+    ]
+    # the formatted details of each scan node: "(N) Scan parquet ...",
+    # its Location line among them
+    scans = [
+        d for d in plan.split("\n(")[1:]
+        if re.match(r"\d+\) Scan parquet", d)
+    ]
+    assert [s for s in scans if f"{src}]" in s], plan
+    assert not [s for s in scans if f"{out}/full" in s], scans
