@@ -96,8 +96,12 @@ def parse_args(argv: list[str] | None = None) -> AnalyzerConfig:
 
     extra = {}
     for pair in filter(None, a.extra_output_topics.split(",")):
-        label, _, topic = pair.partition("=")
-        extra[label.strip()] = topic.strip()
+        label, eq, topic = (part.strip() for part in pair.partition("="))
+        if not (eq and label and topic):
+            p.error(
+                f"--extra-output-topics: {pair!r} is not a label=topic pair"
+            )
+        extra[label] = topic
     return AnalyzerConfig(
         brokers=a.brokers,
         input_pattern=a.input_pattern,
@@ -180,7 +184,7 @@ def _write_drift_report(full, path: str) -> None:
 
     from kafka_dead_letter_analyzer_spark.functions.formatting import TS_PATTERN
     from kafka_dead_letter_analyzer_spark.operators.drift import (
-        _pick_report_bucket,
+        _report_counts,
         bucket_counts,
         dead_letter_drift_report,
     )
@@ -188,24 +192,22 @@ def _write_drift_report(full, path: str) -> None:
     # the full sink carries the reference's FORMATTED timestamp — parse
     # it back once for the detectors
     feed = full.withColumn("event_ts", F.to_timestamp("timestamp", TS_PATTERN))
-    # hour buckets when the feed's span fits the pair operators' cap,
-    # day otherwise (a long-retention feed must not raise)
-    bucket = _pick_report_bucket(feed, "event_ts")
     groups = ["topic", "type"]
-    # the report's one (group, bucket) contraction: its span probe and
-    # its single kernel pass over all four detectors both read it;
-    # released once the report is written so a long session keeps no
-    # cached frame per job
-    counts = bucket_counts(
-        feed, ts_col="event_ts", group_cols=groups, bucket=bucket
+    # the report's one contraction: the bucket pick's span collect fills
+    # the cache, then the kernel pass reads it (re-keyed to days when the
+    # span overflows hour buckets); released once the report is written
+    # so a long session keeps no cached frame per job
+    hours = bucket_counts(
+        feed, ts_col="event_ts", group_cols=groups, bucket="hour"
     ).persist()
     try:
+        bucket, counts = _report_counts(hours, groups)
         dead_letter_drift_report(
             feed, ts_col="event_ts", group_cols=groups, bucket=bucket,
             counts_df=counts,
         ).write.mode("overwrite").parquet(path)
     finally:
-        counts.unpersist()
+        hours.unpersist()
 
 
 def run_streaming(spark, config: AnalyzerConfig) -> list:
@@ -259,6 +261,9 @@ def main(argv: list[str] | None = None) -> None:
         if not config.brokers:
             raise SystemExit("--brokers is required in streaming mode")
         queries = run_streaming(spark, config)
-        spark.streams.awaitAnyTermination()
-        for q in queries:
-            q.stop()
+        try:
+            spark.streams.awaitAnyTermination()
+        finally:
+            # one failed query ends the wait by raising: stop the others
+            for q in queries:
+                q.stop()

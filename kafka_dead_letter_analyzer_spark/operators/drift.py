@@ -36,7 +36,10 @@ to ONE ``applyInPandas`` call of an exact per-group numpy kernel
 longs, densifies in worker memory where a detector needs it, and no
 window, timeline join or pair row ever reaches Spark.  Parallel across
 groups; the global form groups by a constant key.
-``dead_letter_drift_report`` runs all four kernels in one such pass.
+``dead_letter_drift_report`` runs all four kernels in one such pass and
+checks its span cap inside it, with no driver action; the standalone
+``theilsen_trend``, ``mann_kendall`` and ``hampel_outliers`` check
+their ``max_buckets`` with one span ``collect`` each at construction.
 tvd's only shuffle is the (group, category) conditional-count
 contraction; the split point arrives as a 1-row broadcast anchor (no
 driver action).
@@ -61,7 +64,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
-from kafka_dead_letter_analyzer_spark import cache_registry
 from kafka_dead_letter_analyzer_spark.operators.common import (
     null_safe_group_join,
 )
@@ -136,9 +138,9 @@ def bucket_counts(
     (queries.py::x_drift_report joins four) can build this once,
     persist it, and pass it to each detector's ``counts_df`` — paying
     the full-data scan and (group, bucket) shuffle ONCE instead of
-    per detector, and letting the span-probe driver actions
-    (theilsen/hampel/mann-kendall run one each at construction time)
-    hit the cache instead of re-scanning the raw input."""
+    per detector, and letting the span-probe ``collect`` that
+    theilsen/hampel/mann-kendall each run at construction time read
+    the cache instead of re-scanning the raw input."""
     bus = _bucket_us(bucket, "bucket_counts")
     return _bucket_counts(df, ts_col, list(group_cols or []), bus)
 
@@ -170,51 +172,6 @@ def _bucket_counts(
              else F.count(F.lit(1))).cast("bigint").alias("x")
         )
     )
-
-
-_WORST_SPAN_MEMO: "weakref.WeakKeyDictionary" = None  # set below
-
-
-def _worst_span_buckets(counts: DataFrame, span: DataFrame, groups: list):
-    """The timeline detectors' shared guard probe — max over groups of
-    ``t_hi - t_lo + 1`` collected from the span contraction.  Memoized
-    per (counts frame IDENTITY, groups): when one persisted
-    bucket_counts frame fans out to several detectors (the
-    x_drift_report shape), the second and later detectors reuse the
-    first's collected scalar instead of re-running the probe job
-    (3 probe collects -> 1 at construction; measured 0.48 s of the
-    report's construction).  Keyed WEAKLY on the frame object — a
-    detector's own inline build is a fresh object every call, so
-    standalone behavior is unchanged and entries die with the frame;
-    the memoized value only feeds the max_buckets guard (each caller
-    compares against its own cap), never the statistics.
-
-    Staleness assumption (r13 driver advice): identity keying presumes
-    the frame's underlying data does not change while the object lives
-    — true here because frames are rebuilt through the mtime/size-keyed
-    ``load_table`` relation, so a rewritten source yields a NEW frame
-    object; re-collecting a live unpersisted frame over an in-place
-    rewritten file would reuse the stale span scalar (guard only, never
-    the statistics)."""
-    import weakref
-
-    global _WORST_SPAN_MEMO
-    if _WORST_SPAN_MEMO is None:
-        _WORST_SPAN_MEMO = weakref.WeakKeyDictionary()
-    key = tuple(groups)
-    sub = _WORST_SPAN_MEMO.get(counts)
-    if sub is not None and key in sub:
-        return sub[key]
-    worst = span.agg(
-        F.max(F.col("t_hi") - F.col("t_lo") + 1).alias("b")
-    ).collect()[0]["b"]
-    if sub is None:
-        try:
-            sub = _WORST_SPAN_MEMO.setdefault(counts, {})
-        except TypeError:  # unweakrefable frame: skip memoizing
-            return worst
-    sub[key] = worst
-    return worst
 
 
 def _counts_or(
@@ -249,11 +206,13 @@ def _span_guard(
     remedy: str,
 ) -> None:
     """Raise when any group's densified span exceeds ``max_buckets``
-    (one memoized probe, see :func:`_worst_span_buckets`)."""
-    span = counts.groupBy(*groups).agg(
-        F.min("t").alias("t_lo"), F.max("t").alias("t_hi")
+    (one construction-time probe ``collect``)."""
+    worst = (
+        counts.groupBy(*groups)
+        .agg((F.max("t") - F.min("t") + 1).alias("b"))
+        .agg(F.max("b"))
+        .collect()[0][0]
     )
-    worst = _worst_span_buckets(counts, span, groups)
     if worst is not None and worst > max_buckets:
         raise ValueError(
             f"{who}: a group spans {worst} {bucket} buckets"
@@ -1094,6 +1053,12 @@ def mann_kendall(
     return _trend_pass(counts, groups, ("s_stat", "var18", "n_buckets", "n"))
 
 
+#: The drift report's densified-span cap, its pair statistics' bound (a
+#: 4000-bucket span is ~8M pairs per group): :func:`_report_counts`
+#: picks a bucket that fits it, and the report's kernel raises past it.
+_REPORT_MAX_BUCKETS = 4000
+
+
 def dead_letter_drift_report(
     df: DataFrame,
     ts_col: str,
@@ -1121,33 +1086,31 @@ def dead_letter_drift_report(
     Shared work: every detector reads ONE ``(group, bucket)``
     contraction — ``counts_df`` when given (built by
     :func:`bucket_counts` with the same ``ts_col``/``group_cols``/
-    ``bucket``; the caller owns its persistence), else built here,
-    persisted and registered with ``cache_registry`` for the session
-    owner's ``release_all``.  One span probe guards the pair
-    statistics' ``max_buckets=4000`` cap (:func:`theilsen_trend`'s),
-    then ONE ``applyInPandas`` pass runs every detector's kernel on
-    each group's rows (``_cusum_kernel``, ``_hampel_kernel`` with the
-    default ±3-bucket window and k = 3, ``_trend_kernel``) and emits
-    the group's whole report row: no window, no join, no densified
-    timeline in Spark.  A NULL group key is a real group and keeps its
-    row."""
+    ``bucket``; the caller owns its persistence), else built here and
+    read once.  ONE ``applyInPandas`` pass runs every detector's kernel
+    on each group's rows (``_cusum_kernel``, ``_hampel_kernel`` with
+    the default ±3-bucket window and k = 3, ``_trend_kernel``) and
+    emits the group's whole report row: no window, no join, no
+    densified timeline in Spark, and no driver action before the
+    output's own.  The pass raises, before densifying anything, for a
+    group spanning more than the pair statistics' ``max_buckets=4000``
+    cap (:func:`theilsen_trend`'s).  A NULL group key is a real group
+    and keeps its row."""
     groups = list(group_cols)
     bus = _bucket_us(bucket, "dead_letter_drift_report")
-    if counts_df is None:
-        counts = cache_registry.track(
-            _bucket_counts(df, ts_col, groups, bus).persist()
-        )
-    else:
-        counts = _counts_or(
-            df, counts_df, ts_col, groups, bus, "dead_letter_drift_report"
-        )
-    _span_guard(
-        counts, groups, 4000, "dead_letter_drift_report", bucket,
-        "pre-aggregate to a coarser bucket or raise the cap",
+    counts = _counts_or(
+        df, counts_df, ts_col, groups, bus, "dead_letter_drift_report"
     )
-    i64_max = _I64_MAX
+    i64_max, cap = _I64_MAX, _REPORT_MAX_BUCKETS
 
     def report_row(t, x):
+        span = int(t.max()) - int(t.min()) + 1
+        if span > cap:
+            raise ValueError(
+                f"dead_letter_drift_report: a group spans {span} {bucket}"
+                f" buckets (> max_buckets={cap}); pre-aggregate to a"
+                " coarser bucket"
+            )
         cusum = _cusum_kernel(t, x, i64_max)
         trend = _trend_kernel(t, x) or dict.fromkeys(_REPORT_TREND)
         _, _, flagged = _hampel_kernel(_densify(t, x)[1], 3, 3, 1)
@@ -1165,29 +1128,27 @@ def dead_letter_drift_report(
     return _cusum_out(out, groups, bus, *_REPORT_TREND, "flagged_buckets")
 
 
-def _pick_report_bucket(
-    df: DataFrame, ts_col: str, max_buckets: int = 4000
-) -> str:
-    """Finest-fitting bucket for the drift report: hour when the feed's
-    span covers at most ``max_buckets`` hour buckets of
-    :func:`bucket_counts` (``hi DIV b - lo DIV b + 1``, truncating like
-    its key), else day (raises only past ~11 years of days — filter
-    stray timestamps instead)."""
-    lo_hi = df.filter(F.col(ts_col).isNotNull()).agg(
-        F.min(F.unix_micros(F.col(ts_col))).alias("lo"),
-        F.max(F.unix_micros(F.col(ts_col))).alias("hi"),
-    ).collect()[0]
-    if lo_hi["lo"] is None:
-        return "hour"
+def _report_counts(hours: DataFrame, groups: list) -> tuple[str, DataFrame]:
+    """The drift report's ``(bucket, contraction)`` from the feed's hour
+    contraction ``hours`` (:func:`bucket_counts` with ``bucket="hour"``
+    and ``group_cols=groups``): ``hours`` itself when its global span
+    covers at most ``_REPORT_MAX_BUCKETS`` hour buckets, else its rows
+    re-keyed to days.  One ``collect`` reads the span; over a persisted
+    ``hours`` it is also the action that fills the cache.  Raises when
+    even the days overflow — filter stray timestamps instead."""
+    lo, hi = hours.agg(F.min("t"), F.max("t")).collect()[0]
+    if lo is None or hi - lo + 1 <= _REPORT_MAX_BUCKETS:
+        return "hour", hours
 
-    def div(us: int, bus: int) -> int:  # SQL DIV: truncates toward zero
-        return us // bus if us >= 0 else -(-us // bus)
+    def day(h: int) -> int:  # SQL DIV: truncates toward zero
+        return h // 24 if h >= 0 else -(-h // 24)
 
-    for bucket in ("hour", "day"):
-        bus = _BUCKET_US[bucket]
-        if div(lo_hi["hi"], bus) - div(lo_hi["lo"], bus) + 1 <= max_buckets:
-            return bucket
-    raise ValueError(
-        "dead_letter_drift_report: feed spans more than"
-        f" {max_buckets} days; filter stray timestamps"
-    )
+    if day(hi) - day(lo) + 1 > _REPORT_MAX_BUCKETS:
+        raise ValueError(
+            "dead_letter_drift_report: feed spans more than"
+            f" {_REPORT_MAX_BUCKETS} days; filter stray timestamps"
+        )
+    # truncation toward zero composes: (us DIV hour) DIV 24 == us DIV day,
+    # so this is bucket_counts(..., "day") without a second pass
+    days = hours.groupBy(*groups, F.expr("t DIV 24").alias("t"))
+    return "day", days.agg(F.sum("x").alias("x"))

@@ -35,6 +35,44 @@ def test_extra_topics_default_derivation():
     assert cfg.examples_topic == "analyzed-examples"
 
 
+def test_parse_args_rejects_malformed_extra_topics(capsys):
+    import pytest
+
+    for bad in ("stats", "stats=", "=my-stats", "stats=my-stats,examples"):
+        with pytest.raises(SystemExit):
+            parse_args(["--extra-output-topics", bad])
+        assert "not a label=topic pair" in capsys.readouterr().err, bad
+
+
+def test_main_stops_every_query_when_one_fails(monkeypatch):
+    """A failed query makes ``awaitAnyTermination`` raise; ``main`` still
+    stops all four queries."""
+    import types
+
+    import pytest
+
+    from kafka_dead_letter_analyzer_spark import cli, session
+
+    class Query:
+        stopped = False
+
+        def stop(self):
+            self.stopped = True
+
+    def await_any():
+        raise RuntimeError("query failed")
+
+    spark = types.SimpleNamespace(
+        streams=types.SimpleNamespace(awaitAnyTermination=await_any)
+    )
+    queries = [Query() for _ in range(4)]
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(cli, "run_streaming", lambda spark, config: queries)
+    with pytest.raises(RuntimeError, match="query failed"):
+        cli.main(["--brokers", "broker:9092"])
+    assert all(q.stopped for q in queries)
+
+
 def test_batch_mode_end_to_end(spark, tmp_path):
     rows = [
         FX.envelope(offset=0, value_deadletter=FX.dead_letter_value()),
@@ -223,3 +261,25 @@ def test_run_batch_outside_pinned_thread_mode(spark, tmp_path, monkeypatch):
     paths = run_batch(spark, _small_batch(spark, tmp_path))
     assert len(paths) == 5
     assert all(os.path.exists(f"{p}/_SUCCESS") for p in paths.values())
+
+
+def test_warm_drift_report_runs_at_most_six_jobs(spark, tmp_path):
+    """The drift sink of a warm run reads its contraction once: one span
+    collect that fills the cache, then the kernel pass and its write."""
+    cfg = _small_batch(spark, tmp_path)
+    run_batch(spark, cfg)  # cold
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-drift-report", "run_batch")
+    try:
+        run_batch(spark, cfg)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descriptions = [
+        store.job(j).description()
+        for j in sc.statusTracker().getJobIdsForGroup("warm-drift-report")
+    ]
+    drift = [d for d in descriptions
+             if d.isDefined() and d.get() == "run_batch: drift"]
+    assert 0 < len(drift) <= 6, len(drift)

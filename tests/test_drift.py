@@ -1161,9 +1161,14 @@ def test_weighted_cusum_zero_mass_group_has_null_ppm(spark):
 
 def test_hampel_span_guard_and_report_bucket_pick(spark):
     from kafka_dead_letter_analyzer_spark.operators.drift import (
-        _pick_report_bucket,
+        _report_counts,
+        bucket_counts,
         hampel_outliers,
     )
+
+    def pick(df):
+        hours = bucket_counts(df, ts_col="ts", group_cols=["grp"], bucket="hour")
+        return _report_counts(hours, ["grp"])[0]
 
     stray = spark.createDataFrame(
         [("g", _ts(0.5)), ("g", _ts(24 * 365 * 5.0))],
@@ -1176,15 +1181,79 @@ def test_hampel_span_guard_and_report_bucket_pick(spark):
         )
     # short feed -> hour; multi-year feed -> day
     short = _events(spark, [0.5, 5.5])
-    assert _pick_report_bucket(short, "ts") == "hour"
-    assert _pick_report_bucket(stray, "ts") == "day"
+    assert pick(short) == "hour"
+    assert pick(stray) == "day"
     # past the day cap, the picker raises with guidance
     decade = spark.createDataFrame(
         [("g", _ts(0.5)), ("g", _ts(24 * 365 * 20.0))],
         "grp string, ts timestamp",
     )
     with pytest.raises(ValueError, match="stray timestamps"):
-        _pick_report_bucket(decade, "ts")
+        pick(decade)
+
+
+def test_report_day_rekey_equals_day_contraction(spark):
+    """Re-keying the hour contraction with ``t DIV 24`` gives exactly
+    ``bucket_counts(..., "day")``, before 1970 too: SQL DIV truncates
+    toward zero, so -1 us and -1 h both fall in day 0 (a floor would
+    put -1 h in day -1)."""
+    import random
+
+    from kafka_dead_letter_analyzer_spark.operators.drift import (
+        _report_counts,
+        bucket_counts,
+    )
+
+    day_us = 24 * HOUR_US
+    rng = random.Random(7)
+    us = [rng.randrange(-400 * day_us, 400 * day_us) for _ in range(600)]
+    us += [-1, 0, 1, -HOUR_US, -day_us, -day_us - 1, -day_us + 1, day_us - 1]
+    rows = [(rng.choice(["a", "b", None]), u) for u in us]
+    df = spark.createDataFrame(rows, "grp string, us long").select(
+        "grp", F.timestamp_micros("us").alias("ts")
+    )
+    hours = bucket_counts(df, ts_col="ts", group_cols=["grp"], bucket="hour")
+    bucket, days = _report_counts(hours, ["grp"])
+    assert bucket == "day"
+    want = bucket_counts(df, ts_col="ts", group_cols=["grp"], bucket="day")
+    assert days.columns == want.columns
+    assert sorted(days.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def test_drift_report_checks_its_cap_in_the_kernel(spark):
+    """An explicit hour bucket: building the report runs no Spark job
+    and persists nothing; the kernel pass raises for a group spanning
+    4001 buckets and reports one spanning exactly 4000."""
+    from pyspark.errors import PythonException
+
+    from kafka_dead_letter_analyzer_spark.operators.drift import (
+        dead_letter_drift_report,
+    )
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    persisted = sc._jsc.getPersistentRDDs().size()
+
+    def report(last_hour):
+        df = _events(spark, [0.5, last_hour + 0.5])
+        sc.setJobGroup("drift-report-construction", "construction")
+        try:
+            out = dead_letter_drift_report(
+                df, ts_col="ts", group_cols=["grp"], bucket="hour"
+            )
+        finally:
+            sc._jsc.clearJobGroup()
+        bus.waitUntilEmpty()
+        assert not sc.statusTracker().getJobIdsForGroup(
+            "drift-report-construction"
+        )
+        return out
+
+    with pytest.raises(PythonException, match="max_buckets=4000"):
+        report(4000).collect()
+    [r] = report(3999).collect()
+    assert (r["n"], r["buckets"]) == (2, 4000)
+    assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 # ---------------------------------------------------------------------------
@@ -1708,10 +1777,10 @@ def test_counts_df_passthrough_identical_all_detectors(spark):
 
 
 def test_span_probe_memo_guard_still_fires_on_memo_hit(spark):
-    """r13: the worst-span guard probe memoizes per shared counts frame
-    (3 collects -> 1 in x_drift_report's construction); a LATER
-    detector with a TIGHTER max_buckets cap must still raise off the
-    memoized scalar, and a fresh counts frame must get a fresh probe."""
+    """Detectors sharing one counts frame each run their own span probe
+    against their own cap: a LATER detector with a TIGHTER
+    max_buckets cap must still raise, and a fresh counts frame passes
+    its own generous cap."""
     from kafka_dead_letter_analyzer_spark.operators.drift import (
         bucket_counts,
         mann_kendall,
@@ -1722,19 +1791,19 @@ def test_span_probe_memo_guard_still_fires_on_memo_hit(spark):
     shared = bucket_counts(
         df, ts_col="ts", group_cols=["grp"], bucket="hour"
     )
-    # first detector primes the memo (generous cap: no raise)
+    # first detector: generous cap, no raise
     theilsen_trend(
         df, ts_col="ts", group_cols=["grp"], bucket="hour",
         counts_df=shared,
     ).collect()
-    # second detector, SAME frame, tighter cap: must raise from the
-    # memoized scalar (the guard is per-caller even on a memo hit)
+    # second detector, SAME frame, tighter cap: must raise (the guard
+    # is per-caller)
     with pytest.raises(ValueError, match="max_buckets=5"):
         mann_kendall(
             df, ts_col="ts", group_cols=["grp"], bucket="hour",
             counts_df=shared, max_buckets=5,
         ).collect()
-    # a FRESH frame re-probes and passes its own generous cap
+    # a FRESH frame passes its own generous cap
     fresh = bucket_counts(
         df, ts_col="ts", group_cols=["grp"], bucket="hour"
     )
