@@ -370,7 +370,7 @@ def bench_streaming(spark, sf_dir: str) -> dict:
     the reference actually runs in (DeadLetterAnalyzerTopology.java is a
     Kafka Streams app): Kafka-wire-shaped records (JSON DeadLetter
     bytes) -> decode_kafka_records (the S2 cascade, Python Avro tier
-    auto-selected exactly as in production-without-jar) -> F/P dialect
+    on, as in production) -> F/P dialect
     routing -> N1 enrichment -> the stateful A1 statistics operator,
     driven as a real Structured Streaming query over several
     micro-batches.

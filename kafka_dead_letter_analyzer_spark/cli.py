@@ -16,10 +16,9 @@ reproduces that surface:
   writing the four outputs as parquet — the harness this repo's driver and
   tests exercise.
 
-``--schema-registry-url`` is accepted for CLI compatibility and never
-read: the S2 cascade decodes Confluent-framed Avro without a registry
-(the JVM ``from_avro`` when spark-avro is on the classpath, else the
-engine's own Python codec, ``functions/avro_codec.py``).
+``--schema-registry-url`` is parsed for CLI compatibility and ignored:
+the S2 cascade decodes Confluent-framed Avro without a registry, with the
+engine's own Python codec (``functions/avro_codec.py``).
 The large-message serde (claim-check pattern + bakdata byte-flag wire
 protocol) lives in ``streaming/large_message.py`` — apply ``wire_decode``
 after the S2 cascade when input topics carry large-message-encoded values.
@@ -41,7 +40,6 @@ class AnalyzerConfig:
     checkpoint_dir: str = "/tmp/dead-letter-analyzer-checkpoints"
     batch_input: str | None = None
     batch_output: str | None = None
-    schema_registry_url: str | None = None  # accepted for CLI parity, never read
     rocksdb_state_store: bool = False  # reference store choice (Topology.java:220-226)
     drift_report: bool = False  # batch: also write the per-key drift report
 
@@ -75,7 +73,11 @@ def parse_args(argv: list[str] | None = None) -> AnalyzerConfig:
         default="",
         help="label=topic pairs, comma separated (labels: stats, examples)",
     )
-    p.add_argument("--schema-registry-url")
+    p.add_argument(
+        "--schema-registry-url",
+        help="ignored; accepted for parity with the reference CLI (Avro "
+        "is decoded without a registry)",
+    )
     p.add_argument("--checkpoint-dir", default="/tmp/dead-letter-analyzer-checkpoints")
     p.add_argument("--batch-input", help="RAW_ENVELOPE parquet dir (batch mode)")
     p.add_argument("--batch-output", help="output dir for batch mode")
@@ -112,7 +114,6 @@ def parse_args(argv: list[str] | None = None) -> AnalyzerConfig:
         batch_input=a.batch_input,
         batch_output=a.batch_output,
         drift_report=a.drift_report,
-        schema_registry_url=a.schema_registry_url,
         rocksdb_state_store=a.rocksdb_state_store,
     )
 
@@ -214,6 +215,8 @@ def run_streaming(spark, config: AnalyzerConfig) -> list:
     """Streaming mode: start the four queries; returns their handles.
 
     The caller owns the lifecycle (``awaitAnyTermination`` for a service).
+    If one query fails to start, the ones already started are stopped
+    before the error propagates.
     """
     from kafka_dead_letter_analyzer_spark.plans.topology import build_topology
     from kafka_dead_letter_analyzer_spark.streaming.kafka import (
@@ -224,24 +227,25 @@ def run_streaming(spark, config: AnalyzerConfig) -> list:
     raw = read_dead_letter_stream(spark, config.brokers, config.input_pattern)
     topo = build_topology(raw)
     ck = f"{config.checkpoint_dir}/{config.app_id}"
-    return [
-        write_stream_to_kafka(
-            topo.full_dead_letters, config.brokers, config.output_topic,
-            f"{ck}/full", "append", f"{config.app_id}-full",
-        ),
-        write_stream_to_kafka(
-            topo.error_statistics, config.brokers, config.stats_topic,
-            f"{ck}/stats", "update", f"{config.app_id}-stats",
-        ),
-        write_stream_to_kafka(
-            topo.error_examples, config.brokers, config.examples_topic,
-            f"{ck}/examples", "update", f"{config.app_id}-examples",
-        ),
-        write_stream_to_kafka(
-            topo.error_topic, config.brokers, config.error_topic,
-            f"{ck}/errors", "append", f"{config.app_id}-errors",
-        ),
-    ]
+    sinks = (
+        ("full", topo.full_dead_letters, config.output_topic, "append"),
+        ("stats", topo.error_statistics, config.stats_topic, "update"),
+        ("examples", topo.error_examples, config.examples_topic, "update"),
+        ("errors", topo.error_topic, config.error_topic, "append"),
+    )
+    queries = []
+    try:
+        for name, df, topic, mode in sinks:
+            queries.append(write_stream_to_kafka(
+                df, config.brokers, topic, f"{ck}/{name}", mode,
+                f"{config.app_id}-{name}",
+            ))
+    except BaseException:
+        # a later start failed: stop the queries already running
+        for q in queries:
+            q.stop()
+        raise
+    return queries
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -3,11 +3,9 @@ decode cascade's top tier.
 
 Reference behavior: the analyzer's primary input encoding is
 Schema-Registry Avro, auto-detected per record by BruteForceSerde
-(/root/reference/src/main/java/com/bakdata/kafka/DeadLetterAnalyzerTopology.java:102-105,
-/root/reference/README.md:35,44). On a cluster the idiomatic decode path is
-the JVM ``from_avro`` expression (spark-avro package); this module is the
-*executable fallback tier* for environments without the spark-avro jar —
-a spec-compliant subset of the Avro 1.11 binary encoding
+(reference DeadLetterAnalyzerTopology.java:102-105, README.md:35,44).
+This module is the engine's one Avro tier, with no spark-avro jar
+needed: a spec-compliant subset of the Avro 1.11 binary encoding
 (https://avro.apache.org/docs/1.11.1/specification/): zigzag-varint
 ints/longs, length-prefixed UTF-8 strings, union-index prefixes, in-order
 record fields. Only the types the DeadLetter schema uses are implemented
@@ -17,11 +15,11 @@ raises loudly rather than mis-decoding.
 The codec is pure (bytes in, dict out; no Spark, no I/O) so the wire
 layout is property-testable byte-exactly (tests/test_avro_wire.py) and the
 same functions run inside Arrow-batched pandas UDFs
-(streaming/kafka.py::decode_kafka_records ``use_avro="python"``).
+(streaming/kafka.py::decode_kafka_records).
 
 Confluent wire format: 1 magic byte ``0x00`` + 4-byte big-endian schema id
-+ Avro binary payload (public Confluent serde documentation; also evident
-from the engine framing expression ``substring(value, 6)``).
++ Avro binary payload (public Confluent serde documentation); the decode
+cascade's JVM-side prefilter is ``streaming/kafka.py::_is_framed``.
 """
 
 from __future__ import annotations

@@ -46,12 +46,6 @@ def _memo(key, build):
 # ---------------------------------------------------------------------------
 
 
-def dedup_exact(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Exact dedup on raw column equality — ``dropDuplicates``: one
-    hash-shuffle on the key columns, first-arrival row kept per key."""
-    return df.dropDuplicates(cols)
-
-
 def dedup_exact_normalized(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

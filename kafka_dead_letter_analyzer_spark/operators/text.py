@@ -23,7 +23,6 @@ from kafka_dead_letter_analyzer_spark.operators.io import shuffle_partitions
 # Token counting: whitespace tokens + a BPE-ish subword proxy
 # ---------------------------------------------------------------------------
 
-WS_RE = r"\s+"
 # word pieces: runs of letters, runs of digits, or single non-space symbols —
 # a deterministic proxy for BPE pre-tokenization (GPT-2-style splitting)
 WORDPIECE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -362,26 +361,6 @@ def _max_multiplicity(sorted_arr: Column) -> Column:
         )
 
     return F.aggregate(sorted_arr, init, merge, lambda acc: acc["mx"])
-
-
-def repetition_features(text: Column | str, k: int = 3) -> dict[str, Column]:
-    """Per-document k-gram repetition stats as a PURE PROJECTION — zero
-    shuffles. A document's grams live in one row's array (token_grams),
-    so total occurrences are size(), distinct grams are
-    size(array_distinct()), and the max single-gram count is the longest
-    equal-run of the sorted gram array. The alternative grouped-explode
-    formulation shuffles every gram occurrence twice; this one touches
-    nothing but the row. (If documents arrive pre-exploded across rows,
-    fall back to groupBy(doc, gram) — not the stored-corpus case.)"""
-    from kafka_dead_letter_analyzer_spark.operators.dedup import token_grams
-
-    t = F.col(text) if isinstance(text, str) else text
-    grams = token_grams(t, k)
-    return {
-        "n_grams": F.size(grams).cast("bigint"),
-        "max_gram_count": _max_multiplicity(F.array_sort(grams)),
-        "distinct_grams": F.size(F.array_distinct(grams)).cast("bigint"),
-    }
 
 
 def repetition_stats(

@@ -1328,13 +1328,11 @@ def s2_avro_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from `events`, so a framing, union-order, or field-order defect in
     either codec direction flips this red.
 
-    Scale note: this exercises the FALLBACK tier (Arrow-batched Python
-    codec), whose per-record cost is Python-bound by construction — the
-    corpus is bounded (event_id < 30,000: every row at the sf0.01
-    correctness gate, a fixed slice at bench scale) the same way the
-    bounded all-pairs Jaccard query is. On a cluster with the spark-avro
-    jar the same cascade runs the codegen'd JVM `from_avro` branch
-    (decode_kafka_records use_avro=True) with no bound needed.
+    Scale note: the Avro tier is the Arrow-batched Python codec, whose
+    per-record cost is Python-bound by construction — the corpus is
+    bounded (event_id < 30,000: every row at the sf0.01 correctness gate,
+    a fixed slice at bench scale) the same way the bounded all-pairs
+    Jaccard query is.
 
     The bounded slice lands in ONE scan task (parquet splits by bytes),
     so without a spread the whole Python encode+decode cascade runs on
@@ -1372,7 +1370,7 @@ def s2_avro_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("offset"),
         F.col("ts").alias("timestamp"),
     )
-    decoded = decode_kafka_records(kafka_shaped, use_avro="python")
+    decoded = decode_kafka_records(kafka_shaped, use_avro=True)
     return decoded.select(
         F.col("offset").alias("event_id"),
         F.col("value_deadletter").isNotNull().alias("is_avro"),
@@ -1411,11 +1409,10 @@ def s2_avro_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     framing, varint, or rendering defect flips this red.
 
     Scale note: same boundedness contract as s2_avro_wire — the Python
-    codec tier is exercised on a fixed slice; the JVM-side frame
-    prefilter keeps every non-framed key out of the Arrow round trip,
-    and with the spark-avro jar the dispatch lowers to a codegen'd
-    from_avro when-chain.  NO spread here, deliberately: unlike
-    s2_avro_wire's full DeadLetter payloads, the framed keys are tiny
+    codec tier is exercised on a fixed slice, and the JVM-side frame
+    prefilter keeps every non-framed key out of the Arrow round trip.
+    NO spread here, deliberately: unlike s2_avro_wire's full
+    DeadLetter payloads, the framed keys are tiny
     TestRecords — the r13 paired A/B measured the spread variant 1.4x
     SLOWER on this query (the extra exchange outweighs parallelizing
     the light codec work) while wire/multischema won 0.61/0.75."""
@@ -1439,7 +1436,7 @@ def s2_avro_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("timestamp"),
     )
     decoded = decode_kafka_records(
-        kafka_shaped, use_avro="python",
+        kafka_shaped, use_avro=True,
         registry={7: _TEST_RECORD_SCHEMA},
     )
     return decoded.select(
@@ -1514,7 +1511,7 @@ def s2_avro_multischema(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("timestamp"),
     )
     decoded = decode_kafka_records(
-        kafka_shaped, use_avro="python",
+        kafka_shaped, use_avro=True,
         registry={7: _TEST_RECORD_SCHEMA},
     )
     is_dl = F.col("value_deadletter").isNotNull()

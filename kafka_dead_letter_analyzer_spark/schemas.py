@@ -1,17 +1,14 @@
-"""Engine-wide StructTypes mirroring the reference's 9 Avro schemas.
+"""Engine-wide StructTypes: the normalized DeadLetter and the input envelope.
 
 Reference schema sites (all under /root/reference/):
 - DeadLetter / ErrorDescription: upstream bakdata error-handling Avro schema;
   field set + nullability evidenced by the parser builders
   (StreamsDeadLetterParser.java:79-88, ConnectDeadLetterParser.java:74-90).
-- Context.avsc:8-29, ErrorKey.avsc:7-16, ErrorStatistics.avsc:7-27,
-  DeadLetterWithContext.avsc:6-17.
-- Sink shapes: sink/FullDeadLetterWithContext.avsc:6-42,
-  sink/FullErrorStatistics.avsc:6-32, sink/ErrorExample.avsc:6-22,
-  sink/ExampleDeadLetterWithContext.avsc:6-32.
 
 Nullability matches SURVEY.md §1.3-1.4: ``description`` and ``cause`` are
-required, everything else in DeadLetter is optional.
+required, everything else in DeadLetter is optional. The sink shapes
+(sink/*.avsc) are the projections of ``operators/project.py``; their Avro
+writer schemas live in ``functions/avro_codec.py``.
 """
 
 from __future__ import annotations
@@ -39,85 +36,6 @@ DEAD_LETTER = T.StructType(
         T.StructField("description", T.StringType(), False),
         T.StructField("cause", ERROR_DESCRIPTION, False),
         T.StructField("input_timestamp", T.TimestampType(), True),
-    ]
-)
-
-# Consumer-side message context (Context.avsc:8-29)
-CONTEXT = T.StructType(
-    [
-        T.StructField("key", T.StringType(), True),
-        T.StructField("offset", T.LongType(), False),
-        T.StructField("partition", T.IntegerType(), False),
-        T.StructField("timestamp", T.TimestampType(), False),
-    ]
-)
-
-# Aggregation key (ErrorKey.avsc:7-16)
-ERROR_KEY = T.StructType(
-    [
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),
-    ]
-)
-
-# Running aggregate state (ErrorStatistics.avsc:7-27)
-ERROR_STATISTICS = T.StructType(
-    [
-        T.StructField("count", T.IntegerType(), False),
-        T.StructField("created", T.TimestampType(), False),
-        T.StructField("updated", T.TimestampType(), False),
-    ]
-)
-
-DEAD_LETTER_WITH_CONTEXT = T.StructType(
-    [
-        T.StructField("context", CONTEXT, False),
-        T.StructField("dead_letter", DEAD_LETTER, False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Sink shapes (§2.5) — timestamps are pre-formatted strings by design
-# (sink/FullErrorStatistics.avsc:12-21; Formatter.java:43-60)
-# ---------------------------------------------------------------------------
-
-FULL_DEAD_LETTER_WITH_CONTEXT = T.StructType(
-    [
-        T.StructField("key", T.StringType(), True),
-        T.StructField("offset", T.LongType(), False),
-        T.StructField("partition", T.IntegerType(), False),
-        T.StructField("timestamp", T.StringType(), False),
-        T.StructField("dead_letter", DEAD_LETTER, False),
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),
-    ]
-)
-
-FULL_ERROR_STATISTICS = T.StructType(
-    [
-        T.StructField("count", T.IntegerType(), False),
-        T.StructField("created", T.StringType(), False),
-        T.StructField("updated", T.StringType(), False),
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),
-    ]
-)
-
-EXAMPLE_DEAD_LETTER_WITH_CONTEXT = T.StructType(
-    [
-        T.StructField("key", T.StringType(), True),
-        T.StructField("offset", T.LongType(), False),
-        T.StructField("partition", T.IntegerType(), False),
-        T.StructField("timestamp", T.StringType(), False),
-        T.StructField("dead_letter", DEAD_LETTER, False),
-    ]
-)
-
-ERROR_EXAMPLE = T.StructType(
-    [
-        T.StructField("example", EXAMPLE_DEAD_LETTER_WITH_CONTEXT, False),
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),
     ]
 )
 

@@ -13,11 +13,10 @@ Reference behavior being reproduced:
   (BruteForceSerde, DeadLetterAnalyzerTopology.java:102-105): try
   Schema-Registry Avro, fall back to string/bytes. Spark equivalent: a
   ``coalesce`` cascade of parse attempts per record — Confluent-wire Avro
-  (the JVM ``from_avro`` when the spark-avro package is on the classpath,
-  else the engine's own Arrow-batched Python codec), then JSON, then the
-  raw UTF-8 text. Parsing is per-record fallible-by-construction (null on
-  miss), so no record can kill the query — same guarantee BruteForceSerde
-  provides.
+  (the engine's own Arrow-batched Python codec, functions/avro_codec.py),
+  then JSON, then the raw UTF-8 text. Parsing is per-record
+  fallible-by-construction (null on miss), so no record can kill the
+  query — same guarantee BruteForceSerde provides.
 
 Sinks write ``kafka_key`` as the record key and the JSON rendering of the
 sink struct as the value, or Confluent-framed Avro (the reference's
@@ -36,37 +35,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_dead_letter_analyzer_spark.functions.avro_codec import (
-    dead_letter_avro_schema as _dead_letter_avro_schema,
-)
 from kafka_dead_letter_analyzer_spark.schemas import DEAD_LETTER
 
 DEFAULT_INPUT_PATTERN = ".*-dead-letters"  # README.md:43
-
-# ---------------------------------------------------------------------------
-# Avro tiers. Preferred: the JVM from_avro expression (spark-avro package,
-# codegen'd, zero Python in the hot path). Fallback: an Arrow-batched
-# pandas UDF running the engine's own spec-subset Avro codec
-# (functions/avro_codec.py) — ~10-100x slower per byte than the JVM path
-# but it keeps the brute-force cascade COMPLETE (reference: Schema-Registry
-# Avro is BruteForceSerde's primary tier, DeadLetterAnalyzerTopology.java:
-# 102-105) on clusters without the spark-avro jar.
-# ---------------------------------------------------------------------------
-
-
-def _avro_usable(spark: SparkSession) -> bool:
-    try:
-        from pyspark.sql.avro.functions import from_avro  # noqa: F401
-    except ImportError:
-        return False
-    probe = spark.createDataFrame([(bytearray(b"\x02x"),)], "value binary")
-    try:
-        from pyspark.sql.avro.functions import from_avro
-
-        probe.select(from_avro("value", '"string"')).collect()
-        return True
-    except Exception:
-        return False
 
 
 def _iso_millis(ms: int) -> str:
@@ -109,10 +80,8 @@ def brute_force_json_udf(registry: dict | None = None):
     parsing stays JVM-side) — one UDF output serves both the struct tier
     and the P5 stringification.
 
-    Scale: callers prefilter JVM-side (magic byte + length) so only
-    framed bytes cross the Arrow boundary; with the spark-avro jar the
-    same dispatch is expressible as a codegen'd when-chain of
-    ``from_avro``+``to_json`` branches keyed on the frame's schema id."""
+    Scale: callers prefilter JVM-side (``_is_framed``: magic byte +
+    length) so only framed bytes cross the Arrow boundary."""
     import json as _json
 
     from kafka_dead_letter_analyzer_spark.functions import avro_codec
@@ -281,7 +250,7 @@ def _is_framed(col_name: str) -> Column:
 def decode_kafka_records(
     kafka_df: DataFrame,
     *,
-    use_avro: bool | str | None = None,
+    use_avro: bool = True,
     registry: dict | None = None,
 ) -> DataFrame:
     """Kafka source rows -> RAW_ENVELOPE (S2 brute-force cascade).
@@ -291,13 +260,10 @@ def decode_kafka_records(
     partition, offset, timestamp``.
 
     VALUE cascade per record (each attempt null on miss, never throwing):
-    1. Confluent-wire Avro. ``use_avro`` selects the tier implementation:
-       ``True`` = JVM ``from_avro`` (spark-avro package; ``substring(
-       value, 6)`` framing), ``"python"`` = the engine's Arrow-batched
-       codec fallback (functions/avro_codec.py), ``None`` = auto (JVM if
-       loadable, else the Python fallback — the cascade is always
-       complete), ``False`` = tier off (fixtures whose records are never
-       Avro skip the UDF cost).
+    1. Confluent-wire Avro, decoded by the engine's Arrow-batched codec
+       (functions/avro_codec.py, :func:`brute_force_json_udf`).
+       ``use_avro=False`` turns the tier off (inputs whose records are
+       never Avro skip the UDF cost).
        ``registry`` (schema-id -> writer schema JSON) adds multi-schema
        Schema-Registry semantics: a framed value whose id maps to a
        NON-DeadLetter schema still JSON-renders into ``value_text`` — so
@@ -316,12 +282,11 @@ def decode_kafka_records(
     Avro-encoded key to surface as ``{"id":1}`` in context.key, K4, and
     the example. Same tiers: framed Avro -> JSON render, else UTF-8 cast.
     Off (plain cast) when ``use_avro=False``.
-    """
-    if use_avro is None:
-        use_avro = (
-            True if _avro_usable(kafka_df.sparkSession) else "python"
-        )
 
+    Builds the plan only: nothing runs on the session here.
+    """
+    if not isinstance(use_avro, bool):
+        raise TypeError(f"use_avro must be True or False, got {use_avro!r}")
     value_text = F.col("value").cast("string")
     # Staged projections: each parse attempt gets its own Project, so the
     # validity predicate (3 references) and the value (a 4th) read one
@@ -337,35 +302,17 @@ def decode_kafka_records(
         # every non-framed key/value out of the Arrow round trip.
         decode = brute_force_json_udf(registry)
         parse_cols["_key_json"] = decode(F.when(_is_framed("key"), F.col("key")))
-    if use_avro == "python":
         parse_cols["_avro_json"] = decode(
             F.when(_is_framed("value"), F.col("value"))
         )
-    elif use_avro:
-        from pyspark.sql.avro.functions import from_avro
-
-        wire_payload = F.expr("substring(value, 6, length(value) - 5)")
-        parse_cols["_avro"] = from_avro(
-            F.when(_is_framed("value"), wire_payload),
-            _dead_letter_avro_schema(),
-            {"mode": "PERMISSIVE"},
-        )
-        if registry:
-            # Registry-driven multi-schema rendering is Python-codec
-            # territory even under the JVM tier: from_avro carries ONE
-            # schema, so non-DeadLetter ids must round through the same
-            # UDF the python tier uses — value_text/input_value is then
-            # IDENTICAL regardless of which tier auto-selection picked.
-            parse_cols["_avro_json"] = decode(
-                F.when(_is_framed("value"), F.col("value"))
-            )
 
     parsed = kafka_df.select(
         "topic", "partition", "offset", "timestamp", "key", "headers",
         value_text.alias("value_text"),
         *[c.alias(name) for name, c in parse_cols.items()],
     )
-    if use_avro == "python":
+    attempts = []
+    if use_avro:
         # struct-ify the Avro tier's JSON in its own Project (referenced
         # 4x downstream), and fold the rendering into the text tier
         parsed = parsed.withColumn(
@@ -373,26 +320,6 @@ def decode_kafka_records(
         ).withColumn(
             "value_text", F.coalesce(F.col("_avro_json"), F.col("value_text"))
         )
-    elif use_avro:
-        # Tier-3 parity for the JVM branch: when the Avro tier hit, the
-        # text tier carries its JSON rendering, not the raw binary cast.
-        # With a registry the python UDF's rendering is authoritative
-        # (exact cross-tier text equality); without one, to_json(_avro)
-        # renders JVM-side — same semantics, though to_json omits null
-        # fields where the python render writes them explicitly.
-        rendered = (
-            F.col("_avro_json")
-            if registry
-            else F.when(
-                _is_dead_letter(F.col("_avro")), F.to_json(F.col("_avro"))
-            )
-        )
-        parsed = parsed.withColumn(
-            "value_text", F.coalesce(rendered, F.col("value_text"))
-        )
-
-    attempts = []
-    if use_avro:
         attempts.append(F.when(_is_dead_letter(F.col("_avro")), F.col("_avro")))
         key_out = F.coalesce(F.col("_key_json"), F.col("key").cast("string"))
     else:

@@ -1,11 +1,9 @@
 """Avro wire-format validation for the S2 decode cascade's top tier.
 
-The container has neither the spark-avro jar nor fastavro, so the JVM
-``from_avro`` branch of ``decode_kafka_records`` cannot execute here
-(``_avro_usable`` -> False). The engine therefore ships its own
-spec-subset codec (functions/avro_codec.py) as an Arrow-batched fallback
-tier — which means the Avro tier IS executable and is exercised
-end-to-end under Spark in this file (VERDICT r2 next-#3):
+The engine decodes Avro with its own spec-subset codec
+(functions/avro_codec.py), run as an Arrow-batched pandas UDF — no
+spark-avro jar or fastavro needed — so the Avro tier is exercised
+end-to-end under Spark in this file:
 
 1. the reconstructed writer schema is valid Avro whose binary encoding
    round-trips golden DeadLetter records (zigzag varints, length-prefixed
@@ -13,14 +11,16 @@ end-to-end under Spark in this file (VERDICT r2 next-#3):
    https://avro.apache.org/docs/1.11.1/specification/);
 2. the exact byte layout is PINNED: reordering fields, flipping a union's
    branch order, or changing a type changes the golden bytes and fails;
-3. the Confluent wire framing (magic 0x00 + 4-byte schema id + payload)
-   and the JVM branch's framing expression ``substring(value, 6, len-5)``
-   strip exactly those 5 bytes — checked through Spark itself;
-4. ``decode_kafka_records(use_avro="python")`` decodes a REAL framed wire
-   corpus end-to-end — valid records parse field-exactly (timestamps to
-   the millisecond), corrupt/truncated/unframed values fall through the
-   cascade without errors, and the encode UDF -> decode tier round-trip
-   is the identity.
+3. the Confluent wire framing is magic 0x00 + 4-byte schema id + payload,
+   and the cascade's JVM-side prefilter (``_is_framed``) admits a framed
+   value whose 5-byte header strips to the payload — checked through
+   Spark itself;
+4. ``decode_kafka_records`` decodes a REAL framed wire corpus end-to-end
+   — valid records parse field-exactly (timestamps to the millisecond),
+   corrupt/truncated/unframed values fall through the cascade without
+   errors, and the encode UDF -> decode tier round-trip is the identity;
+5. poison records mixed into a good Avro backlog fail no output of the
+   topology and change none of the good records' rows.
 
 The upstream schema source is bakdata error-handling-avro (reference
 build.gradle.kts:43-44); its field set/optionality is evidenced in the
@@ -148,16 +148,19 @@ def test_confluent_framing(schema):
 
 
 def test_confluent_framing_strip_via_spark(spark, schema):
-    """The JVM branch's exact framing expression (streaming/kafka.py)
-    must recover the Avro payload from a Confluent-framed value."""
+    """The decode cascade's frame prefilter (``_is_framed``) admits a
+    Confluent-framed value, and its 5-byte header strips to the Avro
+    payload."""
     from pyspark.sql import functions as F
+
+    from kafka_dead_letter_analyzer_spark.streaming.kafka import _is_framed
 
     payload = encode_bytes(GOLDEN, schema)
     framed = confluent_frame(payload, schema_id=17)
     df = spark.createDataFrame([(bytearray(framed),)], "value binary")
     [row] = df.select(
         F.expr("substring(value, 6, length(value) - 5)").alias("p"),
-        (F.expr("substring(value, 1, 1)") == F.lit(bytes([0]))).alias("is_wire"),
+        _is_framed("value").alias("is_wire"),
     ).collect()
     assert bytes(row["p"]) == payload
     assert decode_bytes(bytes(row["p"]), schema) == GOLDEN
@@ -205,7 +208,7 @@ def test_python_tier_decodes_wire_corpus(spark, schema):
     plain = b"just text"
     out = decode_kafka_records(
         _kafka_shaped(spark, [good, minimal, truncated, json_dl, plain, None]),
-        use_avro="python",
+        use_avro=True,
     )
     rows = {r["offset"]: r for r in out.collect()}
 
@@ -249,7 +252,7 @@ def test_encode_udf_then_python_tier_is_identity(spark, schema):
         confluent_frame(encode_bytes(r, schema), 1) for r in recs
     ]
     shaped = _kafka_shaped(spark, encoded)
-    out = decode_kafka_records(shaped, use_avro="python")
+    out = decode_kafka_records(shaped, use_avro=True)
     rows = {r["offset"]: r for r in out.collect()}
     for i, rec in enumerate(recs):
         dl = rows[i]["value_deadletter"]
@@ -263,13 +266,164 @@ def test_encode_udf_then_python_tier_is_identity(spark, schema):
 
 
 def test_auto_mode_selects_python_tier_without_spark_avro(spark, schema):
-    """In this container _avro_usable is False, so auto (use_avro=None)
-    must still decode framed Avro — via the Python tier. The cascade is
-    complete by default, matching BruteForceSerde's always-on Avro tier."""
+    """The default call decodes framed Avro with the Python tier and no
+    spark-avro jar: the cascade is complete by default, matching
+    BruteForceSerde's always-on Avro tier."""
     good = confluent_frame(encode_bytes(GOLDEN, schema), 1)
     out = decode_kafka_records(_kafka_shaped(spark, [good]))
     [row] = out.collect()
     assert row["value_deadletter"]["description"] == GOLDEN["description"]
+
+
+def test_decode_builds_plan_without_session_calls(spark, schema, monkeypatch):
+    """Wiring the cascade runs nothing on the session: with
+    ``createDataFrame`` and ``collect`` raising, the plan still builds,
+    and it then decodes the wire corpus."""
+    from pyspark.sql import DataFrame, SparkSession
+
+    good = confluent_frame(encode_bytes(GOLDEN, schema), 1)
+    shaped = _kafka_shaped(spark, [good, good[:-3], b"just text", None])
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("decode_kafka_records ran a Spark job")
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "createDataFrame", forbidden)
+        m.setattr(DataFrame, "collect", forbidden)
+        out = decode_kafka_records(shaped)
+    rows = {r["offset"]: r for r in out.collect()}
+    assert rows[0]["value_deadletter"]["description"] == GOLDEN["description"]
+    assert rows[1]["value_deadletter"] is None
+    assert rows[2]["value_text"] == "just text"
+    assert rows[3]["value_deadletter"] is None
+
+
+def test_decode_rejects_non_bool_use_avro(spark):
+    """The Avro tier is on or off; the former tier names are rejected
+    instead of being read as truthy."""
+    shaped = _kafka_shaped(spark, [b"x"])
+    for bad in ("python", None, 1):
+        with pytest.raises(TypeError):
+            decode_kafka_records(shaped, use_avro=bad)
+
+
+def _framed_dead_letter(schema, stack_trace: str, offset: int) -> bytes:
+    from kafka_dead_letter_analyzer_spark.sources import fixtures as FX
+
+    rec = FX.dead_letter_value(offset=offset, stack_trace=stack_trace)
+    rec["input_timestamp"] = 1_704_110_400_000 + offset
+    return confluent_frame(encode_bytes(rec, schema), 1)
+
+
+def test_poison_records_fail_no_output_and_leave_good_rows_alone(spark, schema):
+    """Good Avro dead letters mixed with poison records, through
+    ``build_topology(decode_kafka_records(df))``: all four outputs collect,
+    the good records' full/stats/examples rows equal a run without the
+    poison, and every poison record that is not a dead letter lands in the
+    error topic or in no output. The two poison records that do carry a
+    valid dead letter (a framed key that is not Avro, a 1 MB stack trace)
+    are analyzed like any other, each under its own error type."""
+    import datetime as dt
+
+    from kafka_dead_letter_analyzer_spark.functions import headers as H
+    from kafka_dead_letter_analyzer_spark.plans.topology import build_topology
+    from kafka_dead_letter_analyzer_spark.sources import fixtures as FX
+
+    topic = "orders-dead-letters"
+    t0 = dt.datetime(2024, 1, 1, 12, 0, tzinfo=dt.timezone.utc)
+
+    def row(key, value, offset, headers=None):
+        return (key, value, headers, topic, 0, offset,
+                t0 + dt.timedelta(minutes=offset))
+
+    good_types = [f"com.example.Svc{i}.run(Svc{i}.java:{i + 1})" for i in range(3)]
+    good = [
+        row(
+            b"g%d" % i,
+            _framed_dead_letter(
+                schema,
+                f"java.lang.RuntimeException: boom {i}\n\tat {good_types[i % 3]}\n",
+                i,
+            ),
+            i,
+        )
+        for i in range(12)
+    ]
+    test_record = {
+        "type": "record", "name": "TestRecord",
+        "fields": [{"name": "id", "type": "int"}],
+    }
+    huge_type = "com.example.Huge.run(Huge.java:1)"
+    huge_trace = (
+        f"java.lang.IllegalStateException: huge\n\tat {huge_type}\n"
+        + "\tat com.example.Filler.call(Filler.java:2)\n" * 26_000
+    )
+    assert len(huge_trace) > 1_000_000
+    key_type = "com.example.KeyPoison.run(KeyPoison.java:3)"
+    bad_header = [
+        (k, b"\xff\xfe" if k == H.CONNECT_TASK_ID else v)
+        for k, v in FX.connect_headers()
+    ]
+    not_dead_letters = {
+        "p-unknown-id": confluent_frame(encode_bytes({"id": 9}, test_record), 99),
+        "p-truncated-varint": confluent_frame(b"\x02\xff\xff", 1),
+        "p-unframed": b"\x00\x00\x00\x00\x01",
+        "p-null": None,
+        "p-bad-header": b"not a dead letter",
+    }
+    poison = [
+        row(k.encode(), v, 100 + i, bad_header if k == "p-bad-header" else None)
+        for i, (k, v) in enumerate(not_dead_letters.items())
+    ]
+    framed_key = b"\x00\x00\x00\x00\x01\xff\xfe not avro"
+    poison += [
+        row(framed_key, _framed_dead_letter(
+            schema, f"java.lang.Error: key\n\tat {key_type}\n", 200), 200),
+        row(b"p-huge-trace", _framed_dead_letter(schema, huge_trace, 201), 201),
+    ]
+    shape = (
+        "key binary, value binary, "
+        "headers array<struct<key:string,value:binary>>, "
+        "topic string, partition int, offset long, timestamp timestamp"
+    )
+
+    def outputs(rows):
+        out = build_topology(
+            decode_kafka_records(spark.createDataFrame(rows, shape))
+        )
+        return (
+            sorted(out.full_dead_letters.collect(), key=lambda r: r["kafka_key"]),
+            sorted(out.error_statistics.collect(), key=lambda r: r["kafka_key"]),
+            sorted(out.error_examples.collect(), key=lambda r: r["kafka_key"]),
+            out.error_topic.collect(),
+        )
+
+    clean = outputs(good)
+    full, stats, examples, errors = outputs(good + poison)
+
+    good_keys = {f"g{i}" for i in range(12)}
+    assert len(clean[0]) == 12 and {r["key"] for r in clean[0]} == good_keys
+    assert clean[3] == []
+    assert [r for r in full if r["key"] in good_keys] == clean[0]
+    good_stat_keys = {f"{topic}:{t}" for t in good_types}
+    assert {r["kafka_key"] for r in clean[1]} == good_stat_keys
+    assert [r for r in stats if r["kafka_key"] in good_stat_keys] == clean[1]
+    assert [r for r in examples if r["kafka_key"] in good_stat_keys] == clean[2]
+
+    # not dead letters: the error topic or nowhere
+    error_keys = {r["kafka_key"] for r in errors}
+    assert error_keys <= set(not_dead_letters)
+    assert "p-bad-header" in error_keys  # unparseable Connect task id
+    assert {r["key"] for r in full} == good_keys | {
+        framed_key.decode("utf-8", "replace"), "p-huge-trace"
+    }
+    # valid dead letters: analyzed once each, under their own type
+    assert {r["kafka_key"] for r in stats} == good_stat_keys | {
+        f"{topic}:{huge_type}", f"{topic}:{key_type}"
+    }
+    [huge] = [r for r in full if r["key"] == "p-huge-trace"]
+    assert huge["dead_letter"]["cause"]["stack_trace"] == huge_trace
+    assert {r["kafka_key"] for r in examples} == {r["kafka_key"] for r in stats}
 
 
 # ---------------------------------------------------------------------------
@@ -401,7 +555,7 @@ def test_sink_projection_avro_o4_field_exact(spark, schema):
     assert rec["input_timestamp"] == 1704110400000
     # and through the reader cascade
     shaped = _kafka_shaped(spark, [bytes(row["value"])])
-    [out] = decode_kafka_records(shaped, use_avro="python").collect()
+    [out] = decode_kafka_records(shaped, use_avro=True).collect()
     dl = out["value_deadletter"]
     assert dl["description"] == "boom desc"
     assert int(dl["input_timestamp"].timestamp() * 1000) == 1704110400000

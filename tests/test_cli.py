@@ -73,6 +73,44 @@ def test_main_stops_every_query_when_one_fails(monkeypatch):
     assert all(q.stopped for q in queries)
 
 
+def test_run_streaming_stops_started_queries_when_a_start_fails(monkeypatch):
+    """If the third sink fails to start, ``run_streaming`` stops the two
+    queries already running and re-raises."""
+    import types
+
+    import pytest
+
+    from kafka_dead_letter_analyzer_spark import cli
+    from kafka_dead_letter_analyzer_spark.plans import topology
+    from kafka_dead_letter_analyzer_spark.streaming import kafka
+
+    class Query:
+        stopped = False
+
+        def stop(self):
+            self.stopped = True
+
+    started = []
+
+    def write(sink_df, brokers, topic, checkpoint_dir, mode, name):
+        if len(started) == 2:
+            raise RuntimeError(f"cannot start {name}")
+        started.append(Query())
+        return started[-1]
+
+    topo = types.SimpleNamespace(
+        full_dead_letters="full", error_statistics="stats",
+        error_examples="examples", error_topic="errors",
+    )
+    monkeypatch.setattr(kafka, "read_dead_letter_stream", lambda *a: "raw")
+    monkeypatch.setattr(kafka, "write_stream_to_kafka", write)
+    monkeypatch.setattr(topology, "build_topology", lambda raw: topo)
+    config = parse_args(["--brokers", "broker:9092", "--output-topic", "out"])
+    with pytest.raises(RuntimeError, match="dead-letter-analyzer-out-examples"):
+        cli.run_streaming(None, config)
+    assert len(started) == 2 and all(q.stopped for q in started)
+
+
 def test_batch_mode_end_to_end(spark, tmp_path):
     rows = [
         FX.envelope(offset=0, value_deadletter=FX.dead_letter_value()),

@@ -1700,7 +1700,7 @@ def test_each_streaming_output_decodes_once(spark, kafka_parquet, tmp_path):
     )
 
     raw = spark.readStream.schema(KAFKA_DDL).parquet(kafka_parquet)
-    topo = build_streaming_topology(decode_kafka_records(raw, use_avro="python"))
+    topo = build_streaming_topology(decode_kafka_records(raw, use_avro=True))
     plans = {}
     for attr, mode in (
         ("full_dead_letters", "append"),
@@ -1741,7 +1741,7 @@ def test_streaming_examples_one_jvm_state_operator(spark, kafka_parquet, tmp_pat
     )
 
     raw = spark.readStream.schema(KAFKA_DDL).parquet(kafka_parquet)
-    topo = build_streaming_topology(decode_kafka_records(raw, use_avro="python"))
+    topo = build_streaming_topology(decode_kafka_records(raw, use_avro=True))
     q = (
         kafka_sink_projection(topo.error_examples)
         .writeStream.format("noop")
@@ -1766,7 +1766,7 @@ def test_batch_error_topic_scans_source_once(spark, kafka_parquet):
     )
 
     raw = decode_kafka_records(
-        spark.read.schema(KAFKA_DDL).parquet(kafka_parquet), use_avro="python"
+        spark.read.schema(KAFKA_DDL).parquet(kafka_parquet), use_avro=True
     )
     errors = build_topology(raw).error_topic
     s = plan_of(errors)

@@ -701,7 +701,7 @@ def test_avro_wire_key_decoded_through_topology(spark):
         schema=KAFKA_SHAPE,
     )
     out = build_topology(decode_kafka_records(
-        df, use_avro="python", registry={7: TEST_RECORD_SCHEMA}
+        df, use_avro=True, registry={7: TEST_RECORD_SCHEMA}
     ))
 
     [full] = out.full_dead_letters.collect()
@@ -742,7 +742,7 @@ def test_key_cascade_tiers(spark):
     ]
     out = decode_kafka_records(
         spark.createDataFrame(rows, schema=KAFKA_SHAPE),
-        use_avro="python",
+        use_avro=True,
         registry={7: TEST_RECORD_SCHEMA},
     )
     keys = {r["offset"]: r["key"] for r in out.collect()}
@@ -794,7 +794,7 @@ def test_multischema_avro_value_renders_into_input_value(spark):
     )
     out = build_topology(decode_kafka_records(
         spark.createDataFrame([row], schema=KAFKA_SHAPE),
-        use_avro="python",
+        use_avro=True,
         registry={7: TEST_RECORD_SCHEMA},
     ))
     [full] = out.full_dead_letters.collect()
